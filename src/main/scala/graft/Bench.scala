@@ -74,7 +74,9 @@ object Bench {
     while (kept > 1 && line(qJson(bySlow.take(kept)), bySlow.length - kept).length > 1200)
       kept -= 1
     val stdoutLine = line(qJson(bySlow.take(kept)), bySlow.length - kept)
-    spark.stop()
+    // a shutdown that throws must not cost the round its result line
+    try spark.stop()
+    catch { case scala.util.control.NonFatal(e) => System.err.println(s"spark.stop() failed: $e") }
     println(stdoutLine)
   }
 }

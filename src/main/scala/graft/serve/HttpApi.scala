@@ -6,6 +6,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max, struct, to_json}
 
 /** HTTP serving layer over [[FeatureStore]] — the reference's FastAPI
   * app (`back_end/app/main.py`, `app/routes/feature.py`) re-expressed
@@ -22,10 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     rows (JSON-lines or a JSON array body)
   *
   * Responses are JSON arrays of row objects; serialization runs on
-  * executors (`Dataset.toJSON`) and only the capped result collects —
-  * the server is the EDGE of the system, and the caps (`maxRows`)
-  * keep it driver-scale by contract while every filter still pushes
-  * down to the parquet scan underneath. Spark is the query engine;
+  * executors and only the capped result collects — the server is the
+  * EDGE of the system, and the cap (`maxRows` rows per response, at
+  * most four responses in flight on the handler threads) keeps it
+  * driver-scale by contract while every filter still pushes down to
+  * the parquet scan underneath. Spark is the query engine;
   * HTTP is a thin, stateless adapter — which is exactly the split the
   * reference's FastAPI+Spark layout has.
   */
@@ -58,28 +60,30 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
 
   // --- plumbing ---------------------------------------------------
 
-  /** Stream a DataFrame as a chunked JSON array: `sendResponseHeaders`
-    * with length 0 switches the JDK server to chunked transfer
-    * encoding, and rows flow from `toJSON.toLocalIterator` — the
-    * driver holds ONE partition of serialized rows at a time (the
-    * iterator fetches partitions lazily, never the whole result), so
-    * a maxRows-sized response on all 4 handler threads at once is
-    * bounded by 4 partitions of heap, not 4 full response strings. */
+  /** Send a DataFrame as a JSON array of row objects. Each row is
+    * serialized on the executors by a `to_json(struct(*))` projection
+    * under the caller's limit: the optimizer pushes the projection below
+    * the limit, so `collect` runs a limit-rooted plan (`CollectLimit`,
+    * or `TakeOrderedAndProject` for a sorted top-k) with no exchange.
+    * `Dataset.toJSON` would sit above the limit as an opaque map and
+    * force a single-partition shuffle under it. Every route caps its
+    * query at `maxRows`, so the driver holds at most `maxRows`
+    * serialized rows per response, and at most four responses at once
+    * (one per handler thread). */
   private def respondJson(ex: HttpExchange, status: Int, df: DataFrame): Unit = {
-    // materialize the iterator (analysis + first partition job) BEFORE
-    // committing the response headers, so a failing query still maps
-    // to a clean 400/500 instead of a truncated chunked body
-    val it = df.toJSON.toLocalIterator()
-    it.hasNext // force the first partition job pre-headers
+    // collect BEFORE the headers, so a failing query still maps to a
+    // clean 400/500 instead of a truncated body
+    val rows = df.select(to_json(struct(col("*")))).collect()
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, 0L)
     val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
     try {
       os.write('[')
-      var first = true
-      while (it.hasNext) {
-        if (first) first = false else os.write(',')
-        os.write(it.next().getBytes(StandardCharsets.UTF_8))
+      var i = 0
+      while (i < rows.length) {
+        if (i > 0) os.write(',')
+        os.write(rows(i).getString(0).getBytes(StandardCharsets.UTF_8))
+        i += 1
       }
       os.write(']')
     } finally os.close()
@@ -272,7 +276,9 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
     * completeness check rejects rows with ABSENT fields (FAILFAST
     * alone parses a missing field to null — `{}` would otherwise
     * append a row of nulls). Either violation is a 400, never a
-    * poisoned table. */
+    * poisoned table. The row count and the per-column null flags come
+    * from one aggregate, which also fills the parse cache the append
+    * reads. */
   private def ingestJson(body: String): Long = {
     import spark.implicits._
     val trimmed = body.trim
@@ -287,17 +293,15 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
       .json(spark.createDataset(lines))
     val rows = parsed.cache()
     try {
-      val n =
-        try rows.count()
+      val stats =
+        try rows.select(count(lit(1)) +:
+          schema.fieldNames.toSeq.map(f => max(col(f).isNull).as(f)): _*).head()
         catch { case e: org.apache.spark.SparkException =>
           throw new IllegalArgumentException(
             s"malformed JSON body: ${String.valueOf(e.getMessage).take(200)}") }
+      val n = stats.getLong(0)
       require(n > 0, "no rows parsed from body")
-      // one aggregate flags every incomplete column at once
-      val nullFlags = rows.select(schema.fieldNames.map(f =>
-        org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col(f).isNull).as(f)).toSeq: _*).head()
-      val nullCols = schema.fieldNames.filter(f => nullFlags.getAs[Boolean](f))
+      val nullCols = schema.fieldNames.filter(f => stats.getAs[Boolean](f))
       require(nullCols.isEmpty,
         s"rows with missing/null fields: ${nullCols.mkString(", ")}")
       store.ingest(rows)

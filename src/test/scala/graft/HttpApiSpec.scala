@@ -3,7 +3,10 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.FeatureRow
@@ -52,6 +55,43 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
 
   private def countRows(json: String): Int =
     "\"cc_num\"".r.findAllIn(json).length
+
+  private def newStorePath(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/offline"
+
+  private def withApi[A](store: FeatureStore)(body: String => A): A = {
+    val a = new HttpApi(spark, store)
+    a.start()
+    try body(s"http://127.0.0.1:${a.boundPort}") finally a.stop()
+  }
+
+  private def getAt(b: String, path: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(b + path)).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def rowJson(cc: Long, amt: Double, at: String): String =
+    s"""{"cc_num":$cc,"amt":$amt,"hour_of_day":9,"day_of_week":1,"age_at_txn":40.0,""" +
+      s""""distance_to_merchant":3.2,"txn_count_last_10_min":1,"avg_amt_last_1_hour":$amt,""" +
+      s""""category":"travel","gender":"M","city_pop":500,"feature_timestamp":"$at","is_fraud":0}"""
+
+  /** Jobs started, and stages that wrote shuffle output, while it is registered. */
+  private final class JobRecorder extends SparkListener {
+    val jobs = new AtomicInteger
+    val shuffleStages = new AtomicInteger
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+        shuffleStages.incrementAndGet()
+  }
+
+  private def recording(body: => Unit): JobRecorder = {
+    val sc = spark.sparkContext
+    ListenerDrain(sc) // earlier events must not reach the new listener
+    val r = new JobRecorder
+    sc.addSparkListener(r)
+    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(r)
+    r
+  }
 
   test("health endpoint answers") {
     val r = get("/health")
@@ -121,10 +161,11 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("chunked streaming: full-cap responses on all 4 handler threads concurrently") {
-    // a dedicated store with a response big enough that 4 concurrent
-    // full materializations WOULD have been 4 large driver strings —
-    // the chunked toLocalIterator path bounds heap at partitions, and
-    // every concurrent response must still arrive complete and valid
+    // a dedicated store with a response at the maxRows cap on all four
+    // handler threads at once: the driver holds each response's rows
+    // whole (maxRows of them, four times over) while the body goes out
+    // in chunks, and every concurrent response must still arrive
+    // complete and valid
     val bigPath = java.nio.file.Files.createTempDirectory("graft_http_big_").toString + "/offline"
     val n = 20000
     (0 until n).map(i => row(1000L + i % 50, i.toDouble, "2024-03-01 10:00:00", 0))
@@ -154,6 +195,102 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
         }
       } finally pool.shutdown()
     } finally bigApi.stop()
+  }
+
+  test("concurrent POST /features to one store all land") {
+    val p = newStorePath("graft_http_ingest_")
+    Seq(row(1L, 10.0, "2024-01-01 10:00:00", 0)).toDS().toDF().write.parquet(p)
+    withApi(new FeatureStore(spark, p)) { b =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        // unserialized appends to one directory fail only now and then
+        // (one write's commit deletes the shared `_temporary` under
+        // another); five rounds of four parallel ingests hit that on
+        // every run without the per-path write lock
+        (0 until 5).foreach { round =>
+          val before = spark.read.parquet(p).count()
+          val futures = (0 until 4).map { t =>
+            val body = (0 until 20).map(i => rowJson(500L + 4 * round + t, i.toDouble,
+              f"2024-04-01T10:$i%02d:00.000Z")).mkString("\n")
+            pool.submit(new java.util.concurrent.Callable[HttpResponse[String]] {
+              override def call(): HttpResponse[String] = client.send(
+                HttpRequest.newBuilder(URI.create(b + "/features"))
+                  .header("Content-Type", "application/json")
+                  .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+                HttpResponse.BodyHandlers.ofString())
+            })
+          }
+          futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).foreach { r =>
+            assert(r.statusCode() == 201 && r.body().contains("\"ingested\":20"),
+              s"round $round: ${r.body()}")
+          }
+          assert(spark.read.parquet(p).count() == before + 80, s"round $round")
+        }
+      } finally pool.shutdown()
+    }
+  }
+
+  test("warm lookups build without a job and serve without a shuffle") {
+    val fs = new FeatureStore(spark, storePath)
+    fs.byCcNum(1L).collect() // the first read resolves the store's schema for every reader
+    val build = recording {
+      fs.byCcNum(1L); fs.topKRecent(1L, 2); fs.byDateRange("2024-01-02", "2024-01-03")
+    }
+    assert(build.jobs.get == 0, "building a lookup DataFrame ran a job")
+    val serve = recording {
+      Seq("/features/by-ccnum/1", "/transactions/1/recent?k=2",
+        "/features/by-date?start=2024-01-02&end=2024-01-03").foreach { p =>
+        val r = get(p)
+        assert(r.statusCode() == 200 && countRows(r.body()) > 0, s"$p: ${r.body()}")
+      }
+    }
+    assert(serve.jobs.get > 0)
+    assert(serve.shuffleStages.get == 0,
+      s"${serve.shuffleStages.get} stages wrote shuffle output while serving lookups")
+  }
+
+  test("JSON bodies equal Dataset.toJSON of the same FeatureStore query") {
+    val fs = new FeatureStore(spark, storePath)
+    def wire(df: org.apache.spark.sql.DataFrame) = "[" + df.toJSON.collect().mkString(",") + "]"
+    val cap = 100000 // HttpApi's default maxRows
+    Seq(
+      "/features/by-ccnum/1" -> fs.byCcNum(1L).limit(cap),
+      "/features/by-date?start=2024-01-02&end=2024-01-03" ->
+        fs.byDateRange("2024-01-02", "2024-01-03").limit(cap),
+      "/transactions/1/recent?k=2" -> fs.topKRecent(1L, 2),
+      "/features?limit=3" -> fs.bulk(3)
+    ).foreach { case (p, df) =>
+      val r = get(p)
+      assert(r.statusCode() == 200 && r.body() == wire(df), s"$p: ${r.body()}")
+    }
+  }
+
+  test("the cached store schema follows a late first write, clear() and direct appends") {
+    // a store with no directory yet: the failed first read caches nothing
+    val fresh = new FeatureStore(spark, newStorePath("graft_http_fresh_"))
+    withApi(fresh) { b =>
+      getAt(b, "/features/by-ccnum/7")
+      fresh.ingest(Seq(row(7L, 70.0, "2024-05-01 10:00:00", 0)).toDS().toDF())
+      val r = getAt(b, "/features/by-ccnum/7")
+      assert(r.statusCode() == 200 && countRows(r.body()) == 1, r.body())
+    }
+    // clear() resets the schema: the store starts without `gender`, so a
+    // schema kept across the clear would drop it from every later row
+    val p = newStorePath("graft_http_clear_")
+    Seq(row(8L, 80.0, "2024-05-01 10:00:00", 0)).toDS().toDF().drop("gender").write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    withApi(fs) { b =>
+      assert(!getAt(b, "/features/by-ccnum/8").body().contains("gender"))
+      fs.clear()
+      fs.ingest(Seq(row(9L, 90.0, "2024-05-02 10:00:00", 0)).toDS().toDF())
+      assert(countRows(getAt(b, "/features/by-ccnum/8").body()) == 0)
+      val r = getAt(b, "/features/by-ccnum/9")
+      assert(countRows(r.body()) == 1 && r.body().contains("\"gender\":\"F\""), r.body())
+      // files another writer appends are listed on the next request
+      Seq(row(10L, 100.0, "2024-05-03 10:00:00", 0)).toDS().toDF()
+        .write.mode("append").parquet(p)
+      assert(countRows(getAt(b, "/features/by-ccnum/10").body()) == 1)
+    }
   }
 
   test("unknown routes 404") {
