@@ -1318,10 +1318,16 @@ object Similarity {
       * ints + per-entry header). A corpus over budget fails loudly with
       * the remedies (raise the budget on a bigger driver, shrink the
       * corpus, or serve distributed via [[ivfPqTopKReranked]]) instead
-      * of collecting until the heap dies. */
+      * of collecting until the heap dies. The default budget is half
+      * the driver's maximum heap, so it follows the driver it runs on.
+      * An index with no centroids fails loudly too: there is no
+      * dimension to size the corpus by. */
     def build(index: IvfPqIndex, corpus: DataFrame, idCol: String,
-        vecCol: String, maxBytes: Long = 4L << 30): LocalIvfPq = {
-      val dim = index.centroids.headOption.map(_.length).getOrElse(0)
+        vecCol: String, maxBytes: Long = Runtime.getRuntime.maxMemory / 2): LocalIvfPq = {
+      require(index.centroids.nonEmpty,
+        "LocalIvfPq.build: the index has no centroids — build it over a " +
+          "non-empty corpus (Similarity.buildIvfPqIndex) before serving it")
+      val dim = index.centroids.head.length
       val m = index.codebooks.length
       val rows = corpus.count()
       val estBytes = rows * (dim.toLong * 8L * 3L / 2L + m.toLong * 4L + 48L)

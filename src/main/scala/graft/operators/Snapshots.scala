@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-versioned parquet tables: the metadata layer a 100 TB table
   * needs for ATOMIC commits, time travel, and safe concurrent readers —
@@ -230,13 +231,19 @@ object Snapshots {
     }
   }
 
+  /** A parsed manifest. `schemas` maps each listed file (by
+    * [[statsKey]]) to the Spark schema its footer carries, and `dvRefs`
+    * maps each listed DV sidecar to its [[DvRef]] summary; both are
+    * empty for manifests written before the log recorded them. */
   private final case class Manifest(version: Long, action: String,
       files: Seq[String], ts: Long, batchId: Option[Long],
       removed: Seq[String] = Seq.empty,
       dvs: Seq[String] = Seq.empty,
       removedDvs: Seq[String] = Seq.empty,
       neutral: Boolean = false,
-      restoredFrom: Option[Long] = None)
+      restoredFrom: Option[Long] = None,
+      schemas: Map[String, StructType] = Map.empty,
+      dvRefs: Map[String, Seq[DvRef]] = Map.empty)
 
   // ------------------------------------------------------------------
   // Snapshot-state caches. Manifests are IMMUTABLE once created (the
@@ -307,15 +314,14 @@ object Snapshots {
     val f = fs(spark, table)
     val in = f.open(versionFile(table, v))
     val node = try mapper.readTree(in) finally in.close()
-    def arr(name: String): Seq[String] = Option(node.get(name))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    val files = textArray(node, "files")
     val m = Manifest(node.get("version").asLong(), node.get("action").asText(),
-      node.get("files").elements().asScala.map(_.asText()).toSeq,
-      node.get("ts").asLong(),
+      files, node.get("ts").asLong(),
       Option(node.get("batchId")).map(_.asLong()),
-      arr("removed"), arr("dvs"), arr("removedDvs"),
+      textArray(node, "removed"), textArray(node, "dvs"), textArray(node, "removedDvs"),
       Option(node.get("neutral")).exists(_.asBoolean()),
-      Option(node.get("restoredFrom")).map(_.asLong()))
+      Option(node.get("restoredFrom")).map(_.asLong()),
+      parseSchemas(node, files), parseDvRefs(node))
     putFenced(manifestCache, table, e0, key, m)
     m
   }
@@ -323,8 +329,18 @@ object Snapshots {
   /** The visible state at a version: the data FILES plus the DELETION
     * VECTOR sidecars logically subtracted from them (merge-on-read —
     * each DV row is a `(file_path, row_index)` the readers must skip).
-    * Both lists are manifest-scale. */
-  private final case class State(files: Seq[String], dvs: Seq[String])
+    * Both lists are manifest-scale. `schemas` and `dvRefs` carry what
+    * the log recorded about them (see [[Manifest]]); a file or sidecar
+    * missing from them was committed before the log recorded it. */
+  private final case class State(files: Seq[String], dvs: Seq[String],
+      schemas: Map[String, StructType] = Map.empty,
+      dvRefs: Map[String, Seq[DvRef]] = Map.empty)
+
+  /** One DV sidecar's deletes in one data file: the data file as the
+    * sidecar spells it (`_metadata.file_path`, URI form), how many of
+    * its rows the sidecar marks, and the largest marked row index — the
+    * per-file bitmap size. */
+  private final case class DvRef(file: String, rows: Long, maxRow: Long)
 
   /** Conflict-detection context a MERGE-shaped commit carries into the
     * manifest retry loop: the version the merge read its matches
@@ -401,14 +417,17 @@ object Snapshots {
       .map(readManifest(spark, table, _))
     tail.foldLeft(base) { (acc, m) =>
       m.action match {
-        case "overwrite" => State(m.files, m.dvs) // self-contained reset
-        case "append"    => State(acc.files ++ m.files, acc.dvs ++ m.dvs)
+        case "overwrite" => // self-contained reset
+          State(m.files, m.dvs, m.schemas, m.dvRefs)
+        case "append" | "dv" => // dv = merge-on-read: mark rows deleted, append inserts
+          State(acc.files ++ m.files, acc.dvs ++ m.dvs,
+            acc.schemas ++ m.schemas, acc.dvRefs ++ m.dvRefs)
         case "replace"   => // copy-on-write: swap rewritten files in place
           val dead = m.removed.toSet; val deadDv = m.removedDvs.toSet
           State(acc.files.filterNot(dead) ++ m.files,
-            acc.dvs.filterNot(deadDv) ++ m.dvs)
-        case "dv"        => // merge-on-read: mark rows deleted, append inserts
-          State(acc.files ++ m.files, acc.dvs ++ m.dvs)
+            acc.dvs.filterNot(deadDv) ++ m.dvs,
+            acc.schemas -- m.removed.map(statsKey) ++ m.schemas,
+            acc.dvRefs -- m.removedDvs.map(statsKey) ++ m.dvRefs)
         case other => throw new IllegalStateException(
           s"unknown manifest action '$other' at $table v${m.version}")
       }
@@ -432,10 +451,72 @@ object Snapshots {
     val f = fs(spark, table)
     val in = f.open(checkpointFile(table, v))
     val node = try mapper.readTree(in) finally in.close()
-    State(node.get("files").elements().asScala.map(_.asText()).toSeq,
-      Option(node.get("dvs"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty))
+    val files = textArray(node, "files")
+    State(files, textArray(node, "dvs"), parseSchemas(node, files), parseDvRefs(node))
   }
+
+  private def textArray(node: com.fasterxml.jackson.databind.JsonNode,
+      name: String): Seq[String] = Option(node.get(name))
+    .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+
+  /** Record in a manifest or checkpoint the Spark schema each of
+    * `files` carries: one `schema` string when they all share one (every
+    * commit that writes data), else `schemas` groups of
+    * (schema, files) — a manifest that only references files (restore,
+    * clone, the vacuum horizon, checkpoints) may span commits that
+    * evolved the schema. Files with no recorded schema are left out. */
+  private def putSchemas(json: com.fasterxml.jackson.databind.node.ObjectNode,
+      files: Seq[String], schemas: Map[String, StructType]): Unit = {
+    val known = files.flatMap(f => schemas.get(statsKey(f)).map(f -> _.json))
+    val distinct = known.map(_._2).distinct
+    if (distinct.size == 1 && known.size == files.size) json.put("schema", distinct.head)
+    else if (distinct.nonEmpty) {
+      val arr = json.putArray("schemas")
+      distinct.foreach { s =>
+        val g = arr.addObject()
+        g.put("schema", s)
+        val fa = g.putArray("files")
+        known.filter(_._2 == s).foreach(k => fa.add(k._1))
+      }
+    }
+  }
+
+  private def parseSchemas(node: com.fasterxml.jackson.databind.JsonNode,
+      files: Seq[String]): Map[String, StructType] = {
+    def parse(s: com.fasterxml.jackson.databind.JsonNode) =
+      DataType.fromJson(s.asText()).asInstanceOf[StructType]
+    Option(node.get("schema")) match {
+      case Some(s) => val st = parse(s); files.map(statsKey(_) -> st).toMap
+      case None => Option(node.get("schemas")).toSeq.flatMap(_.elements().asScala)
+        .flatMap { g =>
+          val st = parse(g.get("schema"))
+          textArray(g, "files").map(statsKey(_) -> st)
+        }.toMap
+    }
+  }
+
+  /** Record the [[DvRef]] summary of each of `dvs` that has one, as
+    * `dvRefs: {sidecar: [[file, rows, maxRow], …]}`. */
+  private def putDvRefs(json: com.fasterxml.jackson.databind.node.ObjectNode,
+      dvs: Seq[String], refs: Map[String, Seq[DvRef]]): Unit = {
+    val known = dvs.flatMap(p => refs.get(statsKey(p)).map(p -> _))
+    if (known.nonEmpty) {
+      val o = json.putObject("dvRefs")
+      known.foreach { case (p, rs) =>
+        val a = o.putArray(p)
+        rs.foreach { r =>
+          val t = a.addArray(); t.add(r.file); t.add(r.rows); t.add(r.maxRow)
+        }
+      }
+    }
+  }
+
+  private def parseDvRefs(node: com.fasterxml.jackson.databind.JsonNode)
+      : Map[String, Seq[DvRef]] =
+    Option(node.get("dvRefs")).toSeq.flatMap(_.properties().asScala).map { e =>
+      statsKey(e.getKey) -> e.getValue.elements().asScala.map(t =>
+        DvRef(t.get(0).asText(), t.get(1).asLong(), t.get(2).asLong())).toSeq
+    }.toMap
 
   /** Fold the log once and persist the file set visible at the latest
     * version as a SIDE-CAR checkpoint — after this, every read resolves
@@ -458,6 +539,8 @@ object Snapshots {
       val dv = json.putArray("dvs")
       st.dvs.foreach(dv.add)
     }
+    putSchemas(json, st.files, st.schemas)
+    putDvRefs(json, st.dvs, st.dvRefs)
     // the sidecar also folds the per-file STATS, so stats-based pruning
     // resolves in O(commits since checkpoint) like stateAt — without
     // this, statsFold alone would re-read the whole log per prune call
@@ -695,7 +778,7 @@ object Snapshots {
       throw new IllegalArgumentException(s"no snapshot committed at $table"))
     val st = stateAt(spark, table, v)
     val keep = partitionPrunedFiles(spark, table, filter, Some(v))
-    val base = readState(spark, table, State(keep, st.dvs))
+    val base = readState(spark, table, st.copy(files = keep))
     val pred = filter.map { case (c, vv) =>
       // the hive default partition holds BOTH null and "" values (Spark
       // writes the same sentinel for both) — address it as one unit.
@@ -859,7 +942,8 @@ object Snapshots {
       restoredFrom: Option[Long] = None,
       neutral: Boolean = false,
       mergeGuard: Option[MergeGuard] = None,
-      partitionScope: Option[String => Boolean] = None): Long = {
+      partitionScope: Option[String => Boolean] = None,
+      dvRefs: Map[String, Seq[DvRef]] = Map.empty): Long = {
     val f = fs(spark, table)
     f.mkdirs(logDir(table))
     if ((action == "overwrite" || action == "replace") &&
@@ -872,9 +956,9 @@ object Snapshots {
           "Run DML merge-on-read, do housekeeping on a downstream table, or " +
           "unsetProperty(table, \"streaming\") after detaching the stream")
     raceHook()
-    // footer stats for the commit's files, computed ONCE (files are
-    // immutable across retry attempts); O(new files) footer reads
-    val statsNode = statsJson(spark, table, files)
+    // footer stats and schemas for the commit's files, computed ONCE
+    // (files are immutable across retry attempts); O(new files) footer reads
+    val (statsNode, schemas) = footerMeta(spark, table, files)
     var v = latestVersion(spark, table).map(_ + 1).getOrElse(0L)
     while (true) {
       expectedBase.foreach { e =>
@@ -924,9 +1008,8 @@ object Snapshots {
         val addedDvs = (now -- bd).toSeq.sorted
         if (addedDvs.nonEmpty) {
           val scope = removed.map(new Path(_).toString).toSet
-          lazy val referenced = spark.read.parquet(addedDvs: _*)
-            .select("file_path").distinct().collect()
-            .map(r => normPath(r.getString(0)))
+          lazy val referenced = dvRefsOf(spark, addedDvs, stateAt(spark, table, v - 1).dvRefs)
+            .map(r => normPath(r.file))
           if (scope.nonEmpty && referenced.exists(scope))
             throw new java.util.ConcurrentModificationException(
               s"replace conflict at $table v$v: a concurrent merge-on-read " +
@@ -955,7 +1038,7 @@ object Snapshots {
         if (added.nonEmpty) {
           val keyEq = g.keyCols
             .map(k => col(s"n.$k") <=> col(s"s.$k")).reduce(_ && _)
-          val overlap = spark.read.parquet(added: _*)
+          val overlap = scanFiles(spark, table, added, intervening.flatMap(_.schemas).toMap)
             .select(g.keyCols.map(col): _*).as("n")
             .join(g.sourceKeys.as("s"), keyEq, "left_semi")
             .limit(1).count()
@@ -989,6 +1072,8 @@ object Snapshots {
         val d = json.putArray("removedDvs")
         removedDvs.foreach(d.add)
       }
+      putSchemas(json, files, schemas)
+      putDvRefs(json, dvs, dvRefs)
       statsNode.foreach(sn => json.set[com.fasterxml.jackson.databind.JsonNode]("stats", sn))
       // atomic create-if-absent IS the commit point (hard-link on
       // local/POSIX, exclusive create on HDFS-like stores)
@@ -1003,7 +1088,11 @@ object Snapshots {
 
   /** Read the table at `version` (default: latest). The scan touches
     * ONLY that version's files — immutable, so the result is a
-    * consistent snapshot regardless of concurrent commits. */
+    * consistent snapshot regardless of concurrent commits. Building the
+    * read runs no Spark job: the manifests carry each file's schema and
+    * each deletion-vector sidecar's per-file summary, so the DataFrame
+    * is planned from the log alone (files committed before the log
+    * recorded schemas have one footer read on the driver, once). */
   def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, table)).getOrElse(
       throw new IllegalArgumentException(s"no snapshot committed at $table"))
@@ -1116,7 +1205,7 @@ object Snapshots {
   private def validateWrittenOrAbort(spark: SparkSession, table: String,
       files: Seq[String]): Unit = {
     if (files.isEmpty || constraints(spark, table).isEmpty) return
-    try enforceConstraints(spark, table, spark.read.parquet(files: _*))
+    try enforceConstraints(spark, table, scanFiles(spark, table, files, Map.empty))
     catch {
       case e: IllegalArgumentException =>
         // delete the whole STAGED COMMIT DIR (c-xxxx), not just the
@@ -1158,8 +1247,11 @@ object Snapshots {
   // metadata is read once per committed file (driver, manifest-scale,
   // the same budget as the manifest write itself) and recorded in the
   // commit's manifest, so range pruning at read time is a pure log
-  // fold. Contrast Layout.zoneMap, which pays a column-pruned SCAN to
-  // build and is maintained as a separate artifact: stats-in-log
+  // fold. The same footer read records the files' Spark schema in the
+  // manifest (Delta's `schemaString`), so building a read runs no
+  // schema-inference job. Contrast Layout.zoneMap, which pays a
+  // column-pruned SCAN to build and is maintained as a separate
+  // artifact: stats-in-log
   // piggyback on every commit — append, COW rewrite, MOR insert,
   // compaction — and can never fall out of sync with the table.
   // ------------------------------------------------------------------
@@ -1211,7 +1303,7 @@ object Snapshots {
     *   - everything else — DECIMAL on any physical type, INT96, UUID,
     *     nested — is skipped (never recorded, never pruned). */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-      file: String, cols: Set[String]): Map[String, ColStats] = {
+      file: String, cols: Set[String]): (Map[String, ColStats], Option[StructType]) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1291,9 +1383,20 @@ object Snapshots {
           }
         }
       }
-      perCol.toMap
+      (perCol.toMap, sparkSchemaOf(reader))
     } finally reader.close()
   }
+
+  /** The Spark schema a Spark writer stores in the footer's key-value
+    * metadata — the schema Parquet inference reads back from that file
+    * (`ParquetFileFormat.readSchemaFromFooter`). None for a file written
+    * by another writer: its schema is left to inference. */
+  private def sparkSchemaOf(reader: org.apache.parquet.hadoop.ParquetFileReader)
+      : Option[StructType] =
+    Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+      .collect { case st: StructType => st }
 
   /** True when `bound` is type-compatible with a column's stats type —
     * the guard that keeps pruning conservative: a numeric bound against
@@ -1377,11 +1480,11 @@ object Snapshots {
       }
   }
 
-  /** Compute + attach the stats object for a manifest's files; absent
-    * when the table has no registered stats columns. Keyed by part
-    * FILENAME (globally unique — the write job's UUID). */
-  private def statsJson(spark: SparkSession, table: String,
-      files: Seq[String]): Option[com.fasterxml.jackson.databind.node.ObjectNode] = {
+  /** Read the footers of a manifest's files once: the stats object
+    * (keyed by [[statsKey]]; absent when no file yields stats) and each
+    * file's Spark schema (keyed the same way). */
+  private def footerMeta(spark: SparkSession, table: String, files: Seq[String])
+      : (Option[com.fasterxml.jackson.databind.node.ObjectNode], Map[String, StructType]) = {
     val cols = statsColumns(spark, table)
     // cols may be EMPTY: the per-file row count is still recorded (the
     // Delta/Iceberg always-on numRecords) so metadata-only COUNT(*)
@@ -1389,7 +1492,7 @@ object Snapshots {
     // statistics work on every table, not just stats-columns ones. The
     // cost is one parallelized footer open per NEW file at commit —
     // O(new files) metadata reads the stats-columns path already paid.
-    if (files.isEmpty) return None
+    if (files.isEmpty) return (None, Map.empty)
     val conf = spark.sparkContext.hadoopConfiguration
     // footer opens are independent metadata reads — parallelize on a
     // bounded pool: a large compaction/overwrite commits 10³+ files and
@@ -1400,18 +1503,19 @@ object Snapshots {
     val stats =
       try {
         val futs = files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[(String, Map[String, ColStats])] {
-            def call(): (String, Map[String, ColStats]) =
-              statsKey(f) -> footerStats(conf, f, cols.toSet)
+          pool.submit(new java.util.concurrent.Callable[(Map[String, ColStats], Option[StructType])] {
+            def call(): (Map[String, ColStats], Option[StructType]) =
+              footerStats(conf, f, cols.toSet)
           })
         }
-        futs.map(_.get())
+        files.map(statsKey).zip(futs.map(_.get()))
       } finally pool.shutdown()
     val node = mapper.createObjectNode()
-    stats.foreach { case (name, st) =>
+    stats.foreach { case (name, (st, _)) =>
       if (st.nonEmpty) writeFileStats(node, name, st)
     }
-    if (node.isEmpty) None else Some(node)
+    (if (node.isEmpty) None else Some(node),
+      stats.collect { case (name, (_, Some(sc))) => name -> sc }.toMap)
   }
 
   private def writeFileStats(node: com.fasterxml.jackson.databind.node.ObjectNode,
@@ -1448,9 +1552,10 @@ object Snapshots {
   private def statsKey(f: String): String = new Path(f).toString
 
   /** Folded stats for one file: full-path key first, file-name fallback
-    * for manifests written before the key change (unambiguous on
-    * unpartitioned tables, which is all the old format could serve
-    * correctly). */
+    * for manifests written before the key change. The fold keeps those
+    * name keys only on unpartitioned tables, where they are unambiguous:
+    * a partitioned write reuses part names across partition dirs, so
+    * there a name key may describe another file ([[statsFoldUncached]]). */
   private def fileStatsOf(folded: Map[String, Map[String, ColStats]],
       f: String): Option[Map[String, ColStats]] =
     folded.get(statsKey(f)).orElse(folded.get(new Path(f).getName))
@@ -1530,8 +1635,14 @@ object Snapshots {
     }
     // manifests newer than the checkpoint fold on top; first-wins keeps
     // the checkpoint's (identical) entries for re-listed files
-    versions(spark, table).filter(v => v > from && v <= version).sorted
+    val folded = versions(spark, table).filter(v => v > from && v <= version).sorted
       .foldLeft(base) { (acc, v) => parseStats(readJson(versionFile(table, v)), acc) }
+    // name keys (a path key always holds a '/') come from manifests
+    // written before stats were keyed by path; on a partitioned table
+    // they collide across partition dirs, so its files fall back to
+    // "no stats": never pruned, and COUNT(*) is counted, not summed
+    if (partitionColumnsOf(spark, table).isEmpty) folded
+    else folded.filter(_._1.contains('/'))
   }
 
   /** Visible files at `version` whose recorded [min,max] envelope MAY
@@ -1617,7 +1728,7 @@ object Snapshots {
     if (bands.nonEmpty)
       keep = keep.intersect(
         statsPrunedFilesBands(spark, table, bands, Some(v)))
-    (readState(spark, table, State(keep, st.dvs)), keep.size, st.files.size)
+    (readState(spark, table, st.copy(files = keep)), keep.size, st.files.size)
   }
 
   /** [[read]] restricted to [[statsPrunedFiles]]'s survivors, with the
@@ -1638,7 +1749,7 @@ object Snapshots {
       throw new IllegalArgumentException(s"no snapshot committed at $table"))
     val st = stateAt(spark, table, v)
     val keep = statsPrunedFilesBox(spark, table, box, Some(v))
-    readState(spark, table, State(keep, st.dvs))
+    readState(spark, table, st.copy(files = keep))
   }
 
   /** Metadata-only COUNT(*) at `version` (default latest): sums the
@@ -1660,10 +1771,8 @@ object Snapshots {
       if (st.dvs.isEmpty) total
       else {
         val visible = st.files.map(new Path(_).toString).toSet
-        val dead = spark.read.parquet(st.dvs: _*)
-          .groupBy(col("file_path")).count().collect()
-          .filter(r => visible.contains(normPath(r.getString(0))))
-          .map(_.getLong(1)).sum
+        val dead = dvRefsOf(spark, st.dvs, st.dvRefs)
+          .filter(r => visible.contains(normPath(r.file))).map(_.rows).sum
         total - dead
       }
     }
@@ -1736,7 +1845,7 @@ object Snapshots {
           "the range is not an append delta; use changeFeed for dv ranges, " +
           "or re-read the full snapshot after DML")
     }
-    readFiles(spark, table, range.flatMap(_.files))
+    readFiles(spark, table, range.flatMap(_.files), range.flatMap(_.schemas).toMap)
   }
 
   /** CHANGE DATA FEED over a version range `(fromExclusive,
@@ -1773,17 +1882,20 @@ object Snapshots {
           "not recorded; land DML merge-on-read (deleteWhereMor/" +
           "mergeIntoMor) to get a consumable feed")
     }
-    val ins = readFiles(spark, table, range.flatMap(_.files))
+    val rangeSchemas = range.flatMap(_.schemas).toMap
+    val ins = readFiles(spark, table, range.flatMap(_.files), rangeSchemas)
       .withColumn("_change_type", lit("insert"))
-    val dvParts = range.filter(_.action == "dv").flatMap(_.dvs)
+    val dvCommits = range.filter(_.action == "dv")
+    val dvParts = dvCommits.flatMap(_.dvs)
     if (dvParts.isEmpty) return ins
-    val dv = spark.read.parquet(dvParts: _*)
+    val dv = readDvs(spark, dvParts)
     // the deleted rows' content lives in their (immutable) source
     // files — scan only those, keep the listed positions (decoded to
     // literal names: the stored strings are URI-encoded)
-    val dvFiles = dv.select("file_path").distinct().collect()
-      .map(r => normPath(r.getString(0))).toSeq.sorted
-    val dels = positionsSemi(spark, spark.read.parquet(dvFiles: _*), dv)
+    val dvFiles = dvRefsOf(spark, dvParts, dvCommits.flatMap(_.dvRefs).toMap)
+      .map(r => normPath(r.file)).distinct.sorted
+    val dels = positionsSemi(spark, scanFiles(spark, table, dvFiles,
+      stateAt(spark, table, toInclusive).schemas ++ rangeSchemas), dv)
       .withColumn("_change_type", lit("delete"))
     ins.unionByName(dels)
   }
@@ -1814,14 +1926,6 @@ object Snapshots {
     }
   }
 
-  /** Scan exactly `files`; an empty list resolves to an empty relation
-    * with the schema taken from any file the log knows (the commit-dir
-    * layout is nested, so a bare directory read cannot infer it).
-    * `mergeSchema` unions the per-commit schemas — schema EVOLUTION:
-    * a commit that added a column surfaces it table-wide, with NULLs
-    * for rows from older commits (parquet's own merge semantics; only
-    * widening by new nullable columns is safe — parquet fails loudly
-    * on an incompatible type change at read time). */
   /** Total per-file-bitmap budget (driver + broadcast bytes) under
     * which a DV'd read uses the IN-SCAN bitmap filter; past it (a mass
     * delete over huge files) the read falls back to the anti-join,
@@ -1854,31 +1958,32 @@ object Snapshots {
   private def readState(spark: SparkSession, table: String, st: State,
       mergeSchema: Boolean = false,
       decorate: DataFrame => DataFrame = identity): DataFrame = {
-    if (st.dvs.isEmpty) return decorate(readFiles(spark, table, st.files, mergeSchema))
-    val dv = spark.read.parquet(st.dvs: _*)
+    val files = (fs: Seq[String]) =>
+      decorate(readFiles(spark, table, fs, st.schemas, mergeSchema))
+    if (st.dvs.isEmpty) return files(st.files)
+    val dv = readDvs(spark, st.dvs)
     // dirty = visible files holding at least one DV row (driver-side,
     // file-scale; manifest paths are FS-qualified, DV paths URI-form —
-    // normalize both through hadoop Path, like touchedFiles). The same
-    // pass carries each file's max deleted row index — the bitmap
-    // budget — so discovery stays ONE sidecar-scale aggregation.
-    val perFile = dv.groupBy(col("file_path"))
-      .agg(max(col("row_index")).as("max_ri")).collect()
-    val dvFiles = perFile.map(r => normPath(r.getString(0))).toSet
+    // normalize both through hadoop Path, like touchedFiles), each with
+    // its max deleted row index — the bitmap budget. The log's DvRef
+    // summaries answer both, so building the read runs no job (sidecars
+    // committed before the summaries cost one sidecar-scale aggregate).
+    val perFile = dvRefsOf(spark, st.dvs, st.dvRefs).groupMapReduce(_.file)(_.maxRow)(math.max)
+    val dvFiles = perFile.keys.map(normPath).toSet
     val (dirty, clean) = st.files.partition(f => dvFiles.contains(new Path(f).toString))
-    if (dirty.isEmpty) return decorate(readFiles(spark, table, st.files, mergeSchema))
+    if (dirty.isEmpty) return files(st.files)
     val dirtyNorm = dirty.map(new Path(_).toString).toSet
     // DV rows whose file is no longer visible (rewritten away) are
     // stale-but-harmless: excluded from the budget, the bitmap build,
     // and the dictionary alike
-    val livePerFile = perFile
-      .filter(r => dirtyNorm.contains(normPath(r.getString(0))))
-    val bitmapBytes = livePerFile.map(r => ((r.getLong(1) >>> 6) + 1L) * 8L).sum
-    val scan = decorate(readFiles(spark, table, dirty, mergeSchema))
+    val livePerFile = perFile.filter(e => dirtyNorm.contains(normPath(e._1)))
+    val bitmapBytes = livePerFile.values.map(m => ((m >>> 6) + 1L) * 8L).sum
+    val scan = files(dirty)
     val applied =
       if (bitmapBytes <= dvBitmapMaxBytes) {
-        val liveRaw = livePerFile.map(_.getString(0)).toSeq
+        val liveRaw = livePerFile.keys.toSeq.sorted
         val dvLive =
-          if (liveRaw.length == perFile.length) dv
+          if (liveRaw.length == perFile.size) dv
           else dv.join(
             broadcast(spark.createDataset(liveRaw)(org.apache.spark.sql.Encoders.STRING)
               .toDF("file_path")),
@@ -1887,7 +1992,7 @@ object Snapshots {
         scan.where(!graft.expr.DvBitmap.deleted(bc,
           col("_metadata.file_path"), col("_metadata.row_index")))
       } else {
-        val dvPaths = livePerFile.map(_.getString(0)).sorted
+        val dvPaths = livePerFile.keys.toSeq.sorted
         val fid = typedLit(dvPaths.zipWithIndex.toMap)
         val coded = scan
           .withColumn("__graft_fid", element_at(fid, col("_metadata.file_path")))
@@ -1900,20 +2005,99 @@ object Snapshots {
           "left_anti").drop("__graft_fid", "__graft_ri")
       }
     if (clean.isEmpty) applied
-    else applied.unionByName(decorate(readFiles(spark, table, clean, mergeSchema)),
-      allowMissingColumns = mergeSchema)
+    else applied.unionByName(files(clean), allowMissingColumns = mergeSchema)
   }
 
+  /** Scan exactly `files` (`schemas`: what the log recorded for them);
+    * an empty list resolves to an empty relation with the schema of the
+    * first file the log knows (the commit-dir layout is nested, so a
+    * bare directory read cannot infer it). `mergeSchema` unions the
+    * per-file schemas by reading every footer in a Spark job — schema
+    * EVOLUTION: a commit that added a column surfaces it table-wide,
+    * with NULLs for rows from older commits (parquet's own merge
+    * semantics; only widening by new nullable columns is safe — parquet
+    * fails loudly on an incompatible type change at read time). */
   private def readFiles(spark: SparkSession, table: String,
-      files: Seq[String], mergeSchema: Boolean = false): DataFrame =
-    if (files.nonEmpty)
-      spark.read.option("mergeSchema", mergeSchema.toString).parquet(files: _*)
-    else {
-      val any = versions(spark, table).iterator
-        .flatMap(readManifest(spark, table, _).files).take(1).toSeq
-      require(any.nonEmpty, s"snapshot table $table has no data files to take a schema from")
-      spark.read.parquet(any.head).limit(0)
+      files: Seq[String], schemas: Map[String, StructType],
+      mergeSchema: Boolean = false): DataFrame =
+    if (files.isEmpty) {
+      val m = versions(spark, table).iterator.map(readManifest(spark, table, _))
+        .find(_.files.nonEmpty)
+      require(m.nonEmpty, s"snapshot table $table has no data files to take a schema from")
+      scanFiles(spark, table, m.get.files.take(1), m.get.schemas).limit(0)
+    } else if (mergeSchema)
+      spark.read.option("mergeSchema", "true").parquet(files: _*)
+    else scanFiles(spark, table, files, schemas)
+
+  /** Scan exactly `files` (non-empty) with the schema a plain
+    * `spark.read.parquet(files…)` would infer, without the Spark job
+    * that inference runs. Parquet's non-merging inference takes the
+    * Spark schema of ONE file — the one whose path sorts first — and the
+    * relation makes it nullable, as it does a given schema. That file's
+    * schema comes from the log (`schemas`, recorded at commit); a file
+    * committed before the log recorded schemas has it read from its
+    * footer on the driver, or inferred where the footer holds no Spark
+    * schema, once per file ([[schemaOfFile]]). */
+  private def scanFiles(spark: SparkSession, table: String, files: Seq[String],
+      schemas: Map[String, StructType]): DataFrame = {
+    val first = statsKey(files.minBy(new Path(_).toString))
+    spark.read.schema(schemas.getOrElse(first, schemaOfFile(spark, table, first)))
+      .parquet(files: _*)
+  }
+
+  /** Schemas of files the log did not record one for, per table and
+    * file, fenced like the other snapshot caches. */
+  private val fileSchemaCache = lruCache[StructType](4096)
+
+  private def schemaOfFile(spark: SparkSession, table: String, file: String): StructType = {
+    val key = table + "#f" + file
+    fileSchemaCache.synchronized {
+      val hit = fileSchemaCache.get(key)
+      if (hit != null) return hit
     }
+    val e0 = epochOf(table)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new Path(file), spark.sparkContext.hadoopConfiguration)
+    val footer = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try sparkSchemaOf(reader) finally reader.close()
+    }
+    val s = footer.getOrElse(spark.read.parquet(file).schema)
+    putFenced(fileSchemaCache, table, e0, key, s)
+    s
+  }
+
+  /** DV sidecars are `(file_path, row_index)` frames; reading them with
+    * that schema skips inference. */
+  private val dvSchema = StructType.fromDDL("file_path STRING, row_index LONG")
+
+  private def readDvs(spark: SparkSession, parts: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(parts: _*)
+
+  /** The [[DvRef]] summary of each of `dvs`: from `known` (the log)
+    * where recorded, else from one sidecar-scale aggregate over the
+    * sidecars committed before the log recorded them. */
+  private def dvRefsByPart(spark: SparkSession, dvs: Seq[String],
+      known: Map[String, Seq[DvRef]]): Seq[(String, Seq[DvRef])] = {
+    val missing = dvs.filterNot(p => known.contains(statsKey(p)))
+    val summarized = if (missing.isEmpty) Map.empty[String, Seq[DvRef]]
+      else summarizeDvs(spark, missing)
+    dvs.map(p => p -> known.getOrElse(statsKey(p), summarized.getOrElse(statsKey(p), Nil)))
+  }
+
+  private def dvRefsOf(spark: SparkSession, dvs: Seq[String],
+      known: Map[String, Seq[DvRef]]): Seq[DvRef] =
+    dvRefsByPart(spark, dvs, known).flatMap(_._2)
+
+  /** Per sidecar (keyed by [[statsKey]]): the data files it marks rows
+    * in, with count and max row index. One aggregate over the sidecars. */
+  private def summarizeDvs(spark: SparkSession,
+      parts: Seq[String]): Map[String, Seq[DvRef]] =
+    readDvs(spark, parts)
+      .groupBy(col("_metadata.file_path"), col("file_path"))
+      .agg(count(lit(1)), max(col("row_index"))).collect().toSeq
+      .groupMap(r => normPath(r.getString(0)))(r =>
+        DvRef(r.getString(1), r.getLong(2), r.getLong(3)))
 
   /** ROW PROVENANCE read: [[read]] plus a `_commit_version` column —
     * the version whose commit FIRST wrote each row's file (audit /
@@ -2053,14 +2237,11 @@ object Snapshots {
     val retiredDvs =
       if (st.dvs.isEmpty) Seq.empty[String]
       else {
-        val refs = spark.read.parquet(st.dvs: _*)
-          .select(col("_metadata.file_path").as("dv_part"), col("file_path"))
-          .distinct().collect()
-          .map(r => normPath(r.getString(0)) -> normPath(r.getString(1)))
-        val byPart = refs.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        st.dvs.filter { p =>
-          byPart.get(new Path(p).toString).forall(_.forall(f =>
-            smallNorm.contains(f) || !visibleNorm.contains(f)))
+        dvRefsByPart(spark, st.dvs, st.dvRefs).collect {
+          case (p, refs) if refs.forall { r =>
+            val f = normPath(r.file)
+            smallNorm.contains(f) || !visibleNorm.contains(f)
+          } => p
         }.sorted
       }
     // bin-pack ~packFactor small files per write task; maxRecordsPerFile
@@ -2115,16 +2296,17 @@ object Snapshots {
     * so discovery itself skips files the index already rules out. */
   def touchedFiles(spark: SparkSession, table: String, cond: Column,
       candidates: Option[Seq[String]] = None): Seq[String] = {
-    val visible = filesAt(spark, table,
+    val st = stateAt(spark, table,
       latestVersion(spark, table).getOrElse(
         throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val visible = st.files
     // candidates may arrive in `_metadata.file_path` URI form (the
     // skipping layer's key); normalize both sides through hadoop Path
     val scan = candidates
       .map(_.map(new Path(_).toString).filter(visible.toSet))
       .getOrElse(visible)
     if (scan.isEmpty) return Seq.empty
-    touchedFilesPlan(spark, scan, cond).collect()
+    touchedFilesPlan(spark, table, scan, cond, st.schemas).collect()
       // normalize through hadoop Path: the manifest stores
       // FileSystem-qualified paths, _metadata a URI form
       .map(r => normPath(r.getString(0))).toSeq.sorted
@@ -2134,9 +2316,10 @@ object Snapshots {
     * predicate pushes into the parquet scan and only the predicate's
     * columns + file metadata are read — discovery over a 100 TB table
     * is a narrow-column scan, not a table read). */
-  private[graft] def touchedFilesPlan(spark: SparkSession,
-      files: Seq[String], cond: Column): DataFrame =
-    spark.read.parquet(files: _*)
+  private[graft] def touchedFilesPlan(spark: SparkSession, table: String,
+      files: Seq[String], cond: Column,
+      schemas: Map[String, StructType] = Map.empty): DataFrame =
+    scanFiles(spark, table, files, schemas)
       .where(cond)
       .select(col("_metadata.file_path"))
       .distinct()
@@ -2157,7 +2340,7 @@ object Snapshots {
     * files. No-op (plain scan) when the table has no DVs. */
   private def readFilesWithDvs(spark: SparkSession, table: String,
       st: State, files: Seq[String]): DataFrame =
-    readState(spark, table, State(files, st.dvs))
+    readState(spark, table, st.copy(files = files))
 
   def deleteWhere(spark: SparkSession, table: String, cond: Column,
       candidates: Option[Seq[String]] = None): Cow = {
@@ -2255,7 +2438,7 @@ object Snapshots {
       return Cow(None, 0, visible.size, 0)
     val kept =
       if (touched.isEmpty)
-        readFiles(spark, table, Seq.empty).limit(0) // schema-only empty
+        readFiles(spark, table, Seq.empty, Map.empty) // schema-only empty
       else readFilesWithDvs(spark, table, st, touched)
         .where(!coalesce(cond, lit(false)))
     val v = commitAction(spark, table, kept, "replace", None,
@@ -2332,7 +2515,7 @@ object Snapshots {
       .getOrElse(visible)
     val touched =
       if (scanSet.isEmpty) Seq.empty[String]
-      else spark.read.parquet(scanSet: _*)
+      else scanFiles(spark, table, scanSet, st.schemas)
         .select(col("_metadata.file_path").as("__file") +: keyCols.map(col): _*)
         .as("t")
         .join(srcKeys.as("s"), keyEq, "left_semi")
@@ -2364,7 +2547,7 @@ object Snapshots {
   def restore(spark: SparkSession, table: String, version: Long): Long = {
     val st = stateAt(spark, table, version) // loud on unknown/vacuumed
     commitManifest(spark, table, st.files, "overwrite", None,
-      dvs = st.dvs, restoredFrom = Some(version))
+      dvs = st.dvs, restoredFrom = Some(version), dvRefs = st.dvRefs)
   }
 
   /** Idempotent streaming MERGE — the `foreachBatch` + upsert pattern
@@ -2404,12 +2587,19 @@ object Snapshots {
 
   private def dvRoot(table: String) = new Path(table, "dv")
 
+  /** A written DV sidecar: its part files and their [[DvRef]]
+    * summaries (keyed by [[statsKey]]), recorded in the `dv` manifest. */
+  private final case class DvWrite(parts: Seq[String], refs: Map[String, Seq[DvRef]]) {
+    def rows: Long = refs.valuesIterator.flatten.map(_.rows).sum
+    def referenced: Seq[String] = refs.values.flatten.map(r => normPath(r.file)).toSeq.distinct.sorted
+  }
+
   /** Write a `(file_path, row_index)` frame as a DV sidecar. One
-    * read-back aggregation yields everything the commit needs:
-    * returns (part files, rows written, referenced data files) — or
-    * (empty, 0, empty) with the dir removed when the frame was empty. */
+    * read-back aggregation yields everything the commit needs — the
+    * per-part, per-data-file row counts and max row indexes — or no
+    * parts, with the dir removed, when the frame was empty. */
   private def writeDv(spark: SparkSession, table: String,
-      dvDf: DataFrame): (Seq[String], Long, Seq[String]) = {
+      dvDf: DataFrame): DvWrite = {
     val f = fs(spark, table)
     val dir = new Path(dvRoot(table), s"d-${UUID.randomUUID().toString.take(8)}")
     dvDf.select(col("file_path").cast("string"), col("row_index").cast("long"))
@@ -2417,14 +2607,13 @@ object Snapshots {
     val parts = f.listStatus(dir).map(_.getPath)
       .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
       .map(_.toString).sorted.toSeq
-    val perFile =
-      if (parts.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(parts: _*)
-        .groupBy(col("file_path")).count().collect()
-    val n = perFile.map(_.getLong(1)).sum
-    if (n == 0L) { f.delete(dir, true); (Seq.empty, 0L, Seq.empty) }
-    else (parts, n,
-      perFile.map(r => normPath(r.getString(0))).toSeq.sorted)
+    val summarized = if (parts.isEmpty) Map.empty[String, Seq[DvRef]]
+      else summarizeDvs(spark, parts)
+    // a part the write left empty has no rows to summarize
+    val written = DvWrite(parts, parts.map(p =>
+      statsKey(p) -> summarized.getOrElse(statsKey(p), Nil)).toMap)
+    if (written.rows == 0L) { f.delete(dir, true); DvWrite(Seq.empty, Map.empty) }
+    else written
   }
 
   /** Row-level DELETE as MERGE-ON-READ: write a deletion-vector
@@ -2449,19 +2638,19 @@ object Snapshots {
       .map(_.map(new Path(_).toString).filter(st.files.map(new Path(_).toString).toSet))
       .getOrElse(st.files)
     if (scanSet.isEmpty) return Cow(None, 0, st.files.size)
-    val matches = spark.read.parquet(scanSet: _*)
+    val matches = scanFiles(spark, table, scanSet, st.schemas)
       .where(cond)
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("row_index"))
     val fresh =
       if (st.dvs.isEmpty) matches
-      else matches.join(spark.read.parquet(st.dvs: _*),
+      else matches.join(readDvs(spark, st.dvs),
         Seq("file_path", "row_index"), "left_anti")
-    val (dvParts, n, referenced) = writeDv(spark, table, fresh)
-    if (dvParts.isEmpty) return Cow(None, 0, st.files.size)
+    val dvw = writeDv(spark, table, fresh)
+    if (dvw.parts.isEmpty) return Cow(None, 0, st.files.size)
     val v = commitManifest(spark, table, Seq.empty, "dv", None,
-      dvs = dvParts, requireVisible = referenced)
-    Cow(Some(v), 0, st.files.size, dvRows = n)
+      dvs = dvw.parts, requireVisible = dvw.referenced, dvRefs = dvw.refs)
+    Cow(Some(v), 0, st.files.size, dvRows = dvw.rows)
   }
 
   /** MERGE (upsert) as MERGE-ON-READ: matched target rows are marked
@@ -2506,7 +2695,7 @@ object Snapshots {
       if (scanSet.isEmpty)
         spark.emptyDataFrame
           .select(lit("").as("file_path"), lit(0L).as("row_index")).limit(0)
-      else spark.read.parquet(scanSet: _*)
+      else scanFiles(spark, table, scanSet, st.schemas)
         .select(col("_metadata.file_path").as("file_path") +:
           col("_metadata.row_index").as("row_index") +: keyCols.map(col): _*)
         .as("t")
@@ -2514,16 +2703,16 @@ object Snapshots {
         .select(col("file_path"), col("row_index"))
     val fresh =
       if (st.dvs.isEmpty) matches
-      else matches.join(spark.read.parquet(st.dvs: _*),
+      else matches.join(readDvs(spark, st.dvs),
         Seq("file_path", "row_index"), "left_anti")
-    val (dvParts, n, referenced) = writeDv(spark, table, fresh)
+    val dvw = writeDv(spark, table, fresh)
     val ordered = snap.columns.toSeq
     val files = writeData(spark, table, source.select(ordered.map(col): _*))
     validateWrittenOrAbort(spark, table, files)
     val v = commitManifest(spark, table, files, "dv", batchIdOpt,
-      dvs = dvParts, requireVisible = referenced,
+      dvs = dvw.parts, requireVisible = dvw.referenced, dvRefs = dvw.refs,
       mergeGuard = Some(MergeGuard(base, keyCols, srcKeys)))
-    Cow(Some(v), 0, st.files.size, dvRows = n)
+    Cow(Some(v), 0, st.files.size, dvRows = dvw.rows)
   }
 
   /** Idempotent streaming MOR merge — [[mergeBatch]]'s exactly-once
@@ -2551,11 +2740,9 @@ object Snapshots {
       throw new IllegalArgumentException(s"no snapshot committed at $table")))
     if (st.dvs.isEmpty) return DvStats(0, 0L, 0)
     val visible = st.files.map(new Path(_).toString).toSet
-    val dv = spark.read.parquet(st.dvs: _*)
-    val perFile = dv.groupBy(col("file_path")).count().collect()
     // stale DV rows (their file already rewritten away) are not debt
-    val live = perFile.filter(r => visible.contains(normPath(r.getString(0))))
-    DvStats(live.length, live.map(_.getLong(1)).sum, st.dvs.size)
+    val live = dvRefsOf(spark, st.dvs, st.dvRefs).filter(r => visible.contains(normPath(r.file)))
+    DvStats(live.map(_.file).distinct.size, live.map(_.rows).sum, st.dvs.size)
   }
 
   /** Fold the deletion vectors back into clean data files — Delta's
@@ -2569,9 +2756,7 @@ object Snapshots {
     val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no snapshot committed at $table")))
     if (st.dvs.isEmpty) return Cow(None, 0, st.files.size)
-    val dvFiles = spark.read.parquet(st.dvs: _*)
-      .select("file_path").distinct().collect()
-      .map(r => normPath(r.getString(0))).toSet
+    val dvFiles = dvRefsOf(spark, st.dvs, st.dvRefs).map(r => normPath(r.file)).toSet
     val dirty = st.files.filter(f => dvFiles.contains(new Path(f).toString)).sorted
     if (dirty.isEmpty) {
       // stale DVs only (every referenced file already rewritten away):
@@ -2620,6 +2805,8 @@ object Snapshots {
       val d = json.putArray("dvs")
       st.dvs.foreach(d.add)
     }
+    putSchemas(json, st.files, st.schemas)
+    putDvRefs(json, st.dvs, st.dvRefs)
     // the clone's manifest is self-contained — carry the parent's
     // folded stats so pruning keeps working without re-opening footers
     statsNodeFromFold(statsFold(spark, src, v), st.files)
@@ -2707,8 +2894,9 @@ object Snapshots {
       positions: DataFrame): DataFrame = {
     val files = positions.select(col("file_path")).distinct().collect()
       .map(r => normPath(r.getString(0))).toSeq.sorted
-    if (files.isEmpty) return readFiles(spark, table, Seq.empty).limit(0)
-    positionsSemi(spark, spark.read.parquet(files: _*), positions)
+    if (files.isEmpty) return readFiles(spark, table, Seq.empty, Map.empty)
+    val known = latestVersion(spark, table).map(stateAt(spark, table, _).schemas)
+    positionsSemi(spark, scanFiles(spark, table, files, known.getOrElse(Map.empty)), positions)
   }
 
   /** The file-set DELTA of `version`'s commit vs the version before it:
@@ -2812,6 +3000,8 @@ object Snapshots {
         val d = json.putArray("dvs")
         horizonState.dvs.foreach(d.add)
       }
+      putSchemas(json, horizonState.files, horizonState.schemas)
+      putDvRefs(json, horizonState.dvs, horizonState.dvRefs)
       // the fold would lose the dropped manifests' stats — embed them,
       // keeping range pruning alive past the vacuum horizon
       statsNodeFromFold(statsFold(spark, table, horizon), horizonState.files)

@@ -726,6 +726,32 @@ class LlmSpec extends AnyFunSuite with SparkSuite {
     assert(eng.size == emb.count())
   }
 
+  test("LocalIvfPq.build's default budget is half the driver heap") {
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val built = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+      nCells = 4, m = 8, kCodes = 16)
+    // one row past the estimate that fills half the heap: refused on the
+    // row count alone, before a vector is generated or collected
+    val perRow = built.centroids.head.length.toLong * 12L + 8L * 4L + 48L
+    val budget = Runtime.getRuntime.maxMemory / 2
+    val corpus = spark.range(budget / perRow + 1)
+      .select($"id".as("vec_id"), array(lit(0.0)).as("embedding"))
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.LocalIvfPq.build(built, corpus, "vec_id", "embedding")
+    }
+    assert(ex.getMessage.contains(f"$budget%,d-byte budget"), ex.getMessage)
+  }
+
+  test("LocalIvfPq.build refuses an index with no centroids") {
+    val empty = Similarity.IvfPqIndex(
+      spark.emptyDataFrame, Array.empty[Array[Double]], Array.empty[Array[Array[Double]]])
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.LocalIvfPq.build(empty, Tables.load(spark, sf0001, "embeddings"),
+        "vec_id", "embedding")
+    }
+    assert(ex.getMessage.contains("no centroids"), ex.getMessage)
+  }
+
   test("cross-corpus near-dups equal the within-corpus pairs restricted to probes") {
     import graft.llm.Dedup
     val docs = Tables.load(spark, sf0001, "documents")

@@ -33,7 +33,7 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     graft.operators.Snapshots.commit(spark, t, orders.repartition(4))
     val files = graft.operators.Snapshots.filesAt(spark, t, 0L)
     val plan = executed(graft.operators.Snapshots
-      .touchedFilesPlan(spark, files, $"o_totalprice" < 1000.0))
+      .touchedFilesPlan(spark, t, files, $"o_totalprice" < 1000.0))
     assert(plan.contains("PushedFilters: [IsNotNull(o_totalprice), LessThan(o_totalprice,1000.0)"), plan)
     // 4-column table, 1-column discovery read (plus file metadata)
     assert(plan.contains("ReadSchema: struct<o_totalprice:double>"), plan)

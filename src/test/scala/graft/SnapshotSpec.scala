@@ -1442,6 +1442,45 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     assert(pruned.where($"o_orderkey" === lo).count() == 1)
   }
 
+  test("legacy name-keyed stats on a partitioned table: exact COUNT(*), no file over-pruned") {
+    // manifests written before stats were keyed by path keyed them by
+    // part NAME, and a partitioned write reuses one name in every
+    // partition dir — those entries must read as "no stats", never as
+    // another partition's row count or envelope
+    val t = tbl()
+    val base = spark.range(0, 2100).where($"id" < 1500 || $"id" >= 2000)
+      .select($"id".as("k"), ($"id" / 1000).cast("int").as("p"))
+    Snapshots.setPartitionColumns(spark, t, Seq("p"))
+    Snapshots.setStatsColumns(spark, t, Seq("k"))
+    Snapshots.commit(spark, t, base.coalesce(1)) // one task: part-00000-… in each dir
+    val files = Snapshots.filesAt(spark, t, 0L)
+    assert(files.size == 3 &&
+      files.map(new org.apache.hadoop.fs.Path(_).getName).distinct.size == 1)
+    // re-key v0's stats by file name, last write winning, as the old writer did
+    val fsys = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v0 = new org.apache.hadoop.fs.Path(t, "_graft_log/v00000000000.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = { val in = fsys.open(v0); try mapper.readTree(in) finally in.close() }
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val byName = mapper.createObjectNode()
+    node.get("stats").properties().forEach(e =>
+      byName.set[com.fasterxml.jackson.databind.JsonNode](
+        new org.apache.hadoop.fs.Path(e.getKey).getName, e.getValue))
+    node.set[com.fasterxml.jackson.databind.JsonNode]("stats", byName)
+    val out = fsys.create(v0, true)
+    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+    Snapshots.invalidateCaches(t)
+    assert(Snapshots.countAt(spark, t).forall(_ == base.count()),
+      s"metadata COUNT(*) ${Snapshots.countAt(spark, t)} != ${base.count()}")
+    // each partition's own key range must keep its file
+    Seq((0L, 10L), (1000L, 1010L), (2000L, 2010L)).foreach { case (lo, hi) =>
+      val kept = Snapshots.readStatsPruned(spark, t, "k", lo, hi)
+        .where($"k".between(lo, hi)).count()
+      assert(kept == hi - lo + 1, s"band [$lo, $hi] kept $kept rows")
+    }
+  }
+
   test("stats-in-log fold resolves through the checkpoint sidecar") {
     val t = tbl()
     Snapshots.setStatsColumns(spark, t, Seq("o_totalprice"))
