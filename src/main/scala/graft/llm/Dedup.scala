@@ -76,12 +76,6 @@ object Dedup {
         element_at(col("tk"), col("i") + 1),
         element_at(col("tk"), col("i") + 2)).as("sh"))
 
-  /** MinHash signature as an array of `n` 64-bit minima over xxhash64 of
-    * the shingles, seeded per hash index. Per-row, shuffle-free. */
-  def minhashSignature(shingles: Column, n: Int): Column =
-    transform(sequence(lit(0), lit(n - 1)),
-      i => array_min(transform(shingles, s => xxhash64(i, s))))
-
   /** Portable MinHash over md5 hex strings (reproducible in any engine
     * with md5 — the DuckDB-oracle contract; xxhash64 variant is the fast
     * path). Hash index i reads 8 hex chars (32 bits) at offset

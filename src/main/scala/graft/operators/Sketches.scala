@@ -319,13 +319,6 @@ object Sketches {
       .select(keyOut :+ kllOut: _*)
   }
 
-  /** Driver-side quantile estimates from one serialized sketch row. */
-  def kllQuantiles(sketch: Array[Byte], probs: Seq[Double]): Seq[Double] = {
-    val sk = kllFrom(sketch)
-    probs.map(p => sk.getQuantile(p,
-      org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE))
-  }
-
   /** Point-estimate frequencies for `keys` from a serialized sketch.
     * Addition is commutative, so the estimates are deterministic
     * across partition orders — only the (sketch-bounded) collision

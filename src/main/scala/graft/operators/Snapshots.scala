@@ -527,8 +527,7 @@ object Snapshots {
     * periodically on long-lived streaming tables (e.g. every N
     * `commitBatch`es). Returns the checkpointed version. */
   def checkpoint(spark: SparkSession, table: String): Long = {
-    val v = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table)
     val st = stateAt(spark, table, v)
     val f = fs(spark, table)
     val json = mapper.createObjectNode()
@@ -761,8 +760,7 @@ object Snapshots {
   def partitionPrunedFiles(spark: SparkSession, table: String,
       filter: Map[String, Any], version: Option[Long] = None): Seq[String] = {
     validatePartitionFilter(spark, table, filter, "partitionPrunedFiles")
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table, version)
     stateAt(spark, table, v).files.filter(partitionMatches(_, filter))
   }
 
@@ -774,8 +772,7 @@ object Snapshots {
     * result is exact even against a hand-dropped file. */
   def readPartitions(spark: SparkSession, table: String,
       filter: Map[String, Any], version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table, version)
     val st = stateAt(spark, table, v)
     val keep = partitionPrunedFiles(spark, table, filter, Some(v))
     val base = readState(spark, table, st.copy(files = keep))
@@ -806,8 +803,7 @@ object Snapshots {
   def deletePartitions(spark: SparkSession, table: String,
       filter: Map[String, Any]): Cow = {
     validatePartitionFilter(spark, table, filter, "deletePartitions")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val st = stateAt(spark, table, base)
     val unpartitioned = st.files.filter(partitionValuesOf(_).isEmpty)
     require(unpartitioned.isEmpty,
@@ -835,8 +831,7 @@ object Snapshots {
     * carried by reference. */
   def overwritePartitions(spark: SparkSession, table: String,
       df: DataFrame): Cow = {
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val pcols = partitionColumnsOf(spark, table)
     require(pcols.nonEmpty,
       s"overwritePartitions: $table has no registered partition columns")
@@ -943,7 +938,9 @@ object Snapshots {
       neutral: Boolean = false,
       mergeGuard: Option[MergeGuard] = None,
       partitionScope: Option[String => Boolean] = None,
-      dvRefs: Map[String, Seq[DvRef]] = Map.empty): Long = {
+      dvRefs: Map[String, Seq[DvRef]] = Map.empty,
+      logStats: Map[String, Map[String, ColStats]] = Map.empty,
+      logSchemas: Map[String, StructType] = Map.empty): Long = {
     val f = fs(spark, table)
     f.mkdirs(logDir(table))
     if ((action == "overwrite" || action == "replace") &&
@@ -957,8 +954,15 @@ object Snapshots {
           "unsetProperty(table, \"streaming\") after detaching the stream")
     raceHook()
     // footer stats and schemas for the commit's files, computed ONCE
-    // (files are immutable across retry attempts); O(new files) footer reads
-    val (statsNode, schemas) = footerMeta(spark, table, files)
+    // (files are immutable across retry attempts); O(new files) footer
+    // reads. A file `logStats` and `logSchemas` (the fold's, for a
+    // commit that only re-references files) both describe opens none.
+    val described = files.filter(f =>
+      fileStatsOf(logStats, f).exists(_.nonEmpty) && logSchemas.contains(statsKey(f))).toSet
+    val (footStats, footSchemas) = footerMeta(spark, table, files.filterNot(described))
+    val statsNode = statsNodeFromFold(
+      footStats ++ described.map(f => statsKey(f) -> fileStatsOf(logStats, f).get), files)
+    val schemas = footSchemas ++ logSchemas
     var v = latestVersion(spark, table).map(_ + 1).getOrElse(0L)
     while (true) {
       expectedBase.foreach { e =>
@@ -1093,11 +1097,28 @@ object Snapshots {
     * each deletion-vector sidecar's per-file summary, so the DataFrame
     * is planned from the log alone (files committed before the log
     * recorded schemas have one footer read on the driver, once). */
-  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
-    readState(spark, table, stateAt(spark, table, v))
+  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame =
+    readState(spark, table, stateAt(spark, table, versionOrLatest(spark, table, version)))
+
+  /** [[read]] of the rows matching `where`, scanning only the files
+    * that may hold one ([[prunedFiles]]): partition equality, `IS NULL`
+    * and `IN` conjuncts prune by path, comparison conjuncts by the
+    * per-file stats the log records. Deletion vectors still apply, and
+    * so does `where` itself: the result equals
+    * `read(spark, table, version).where(where)`. */
+  def read(spark: SparkSession, table: String, version: Option[Long],
+      where: Column): DataFrame = {
+    val v = versionOrLatest(spark, table, version)
+    val st = stateAt(spark, table, v)
+    readState(spark, table, st.copy(files = survivors(spark, table, v, st, where)))
+      .where(where)
   }
+
+  /** `version`, or the latest committed one; loud when there is none. */
+  private def versionOrLatest(spark: SparkSession, table: String,
+      version: Option[Long] = None): Long =
+    version.orElse(latestVersion(spark, table)).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot committed at $table"))
 
   private def constraintsFile(table: String) =
     new Path(logDir(table), "constraints.json")
@@ -1480,11 +1501,11 @@ object Snapshots {
       }
   }
 
-  /** Read the footers of a manifest's files once: the stats object
-    * (keyed by [[statsKey]]; absent when no file yields stats) and each
-    * file's Spark schema (keyed the same way). */
+  /** Read the footers of a manifest's files once: each file's stats
+    * (keyed by [[statsKey]]; absent when the file yields none) and its
+    * Spark schema (keyed the same way). */
   private def footerMeta(spark: SparkSession, table: String, files: Seq[String])
-      : (Option[com.fasterxml.jackson.databind.node.ObjectNode], Map[String, StructType]) = {
+      : (Map[String, Map[String, ColStats]], Map[String, StructType]) = {
     val cols = statsColumns(spark, table)
     // cols may be EMPTY: the per-file row count is still recorded (the
     // Delta/Iceberg always-on numRecords) so metadata-only COUNT(*)
@@ -1492,7 +1513,7 @@ object Snapshots {
     // statistics work on every table, not just stats-columns ones. The
     // cost is one parallelized footer open per NEW file at commit —
     // O(new files) metadata reads the stats-columns path already paid.
-    if (files.isEmpty) return (None, Map.empty)
+    if (files.isEmpty) return (Map.empty, Map.empty)
     val conf = spark.sparkContext.hadoopConfiguration
     // footer opens are independent metadata reads — parallelize on a
     // bounded pool: a large compaction/overwrite commits 10³+ files and
@@ -1510,11 +1531,7 @@ object Snapshots {
         }
         files.map(statsKey).zip(futs.map(_.get()))
       } finally pool.shutdown()
-    val node = mapper.createObjectNode()
-    stats.foreach { case (name, (st, _)) =>
-      if (st.nonEmpty) writeFileStats(node, name, st)
-    }
-    (if (node.isEmpty) None else Some(node),
+    (stats.collect { case (name, (st, _)) if st.nonEmpty => name -> st }.toMap,
       stats.collect { case (name, (_, Some(sc))) => name -> sc }.toMap)
   }
 
@@ -1645,112 +1662,127 @@ object Snapshots {
     else folded.filter(_._1.contains('/'))
   }
 
-  /** Visible files at `version` whose recorded [min,max] envelope MAY
-    * intersect `[lo, hi]` on column `c` — a no-false-negative superset:
-    * files with no recorded stats are kept, all-NULL files and disjoint
-    * envelopes are pruned (range predicates never match NULL). The
-    * survivor list is only meaningful under the caller's own range
-    * predicate. Pure log fold — no file is opened, no data scanned. */
-  def statsPrunedFiles(spark: SparkSession, table: String, c: String,
-      lo: Any, hi: Any, version: Option[Long] = None): Seq[String] =
-    statsPrunedFilesBox(spark, table, Map(c -> (lo, hi)), version)
+  /** What a predicate lets a read skip, from its conjuncts: equality or
+    * `IS NULL` (`partitionEq`) and `IN` (`partitionIn`) on registered
+    * partition columns, matched by path parsing; and open-ended stats
+    * bands (`bands`: per column, either side optional), checked against
+    * each file's recorded min/max. */
+  private final case class Skipping(partitionEq: Map[String, Any],
+      partitionIn: Map[String, Seq[Any]],
+      bands: Map[String, (Option[Any], Option[Any])]) {
+    def describe: String =
+      (if (partitionEq.nonEmpty || partitionIn.nonEmpty)
+        (partitionEq.keys ++ partitionIn.keys).mkString(" partPrune=[", ",", "]") else "") +
+        (if (bands.nonEmpty) bands.keys.mkString(" statsBands=[", ",", "]") else "")
+  }
 
-  /** Multi-column box pruning: visible files whose recorded envelopes
-    * may intersect EVERY `[lo, hi]` band in `box` — the intersection of
-    * the per-column survivor sets, in one log fold. On a
-    * [[Layout.zorderBy]] layout both dimensions' envelopes are tight,
-    * so a 2-D box out-prunes either 1-D band alone (the stats-in-log
-    * twin of the zone-map box prune). Same conservative contract per
-    * column: missing stats, mismatched bound types → never prune. */
-  def statsPrunedFilesBox(spark: SparkSession, table: String,
-      box: Map[String, (Any, Any)], version: Option[Long] = None): Seq[String] =
-    statsPrunedFilesBands(spark, table,
-      box.map { case (c, (lo, hi)) => c -> (Option(lo), Option(hi)) }, version)
-
-  /** OPEN-ENDED band pruning: each column band may omit either side
-    * (`None` = unbounded) — the shape a pushed one-sided predicate
-    * (`ts >= X`, the retention read) produces. Same conservative
-    * contract as the box twin: missing stats, mismatched bound types,
-    * all-unbounded bands → never prune. */
-  def statsPrunedFilesBands(spark: SparkSession, table: String,
-      bands: Map[String, (Option[Any], Option[Any])],
-      version: Option[Long] = None): Seq[String] = {
-    require(bands.nonEmpty, "statsPrunedFilesBands: at least one column band")
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
-    val folded = statsFold(spark, table, v)
-    stateAt(spark, table, v).files.filter { f =>
-      val fileStats = fileStatsOf(folded, f)
-      bands.forall { case (c, (lo, hi)) =>
-        fileStats.flatMap(_.get(c)) match {
-          case None => true // no stats — never prune
-          case Some(cs) if lo.exists(!boundComparable(cs.typ, _)) ||
-              hi.exists(!boundComparable(cs.typ, _)) => true // mismatched bound types
-          case Some(cs) =>
-            (lo.isEmpty && hi.isEmpty) || (cs.hasValues &&
-              lo.forall(b => cmpStats(cs.typ, cs.max, b) >= 0) &&
-              hi.forall(b => cmpStats(cs.typ, cs.min, b) <= 0))
-        }
+  /** The skipping hints `where` yields for `st` (none for an empty
+    * state, which has no schema to resolve against). The predicate is
+    * resolved against an empty relation of the schema a read of `st`
+    * has (analysis only, no job); constant folding and cast unwrapping
+    * let a literal of a wider type (`int_col >= 5L`) still bound the
+    * column. An AND-ed conjunct comparing a column with a literal (`=`,
+    * `<`, `<=`, `>`, `>=`), testing it `IS NULL`, or listing literals
+    * with `IN` may become a hint; anything else (OR, UDFs, a cast
+    * column) gives none. Bounds weaker than exact are safe, as the read
+    * re-applies `where`: first-seen per side suffices, and a strict `>`
+    * sharing its bound with the inclusive band keeps at most one
+    * boundary file too many. */
+  private def skipping(spark: SparkSession, table: String, st: State,
+      where: Column): Skipping = {
+    if (st.files.isEmpty) return Skipping(Map.empty, Map.empty, Map.empty)
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryComparison, Expression, In, IsNull, Literal}
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, UnwrapCastInBinaryComparison}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val analyzed = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      schemaOf(spark, table, st.files, st.schemas))
+      .where(where).queryExecution.analyzed
+    val cond = UnwrapCastInBinaryComparison(ConstantFolding(analyzed))
+      .collectFirst { case Filter(c, _) => c }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val conj = cond.toSeq.flatMap(conjuncts)
+    def value(l: Literal): Any = convertToScala(l.value, l.dataType)
+    // comparisons of a column with a literal, column on the left:
+    // (column, operator, value)
+    val flipped = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=", "=" -> "=")
+    val cmps = conj.collect {
+      case b: BinaryComparison if flipped.contains(b.symbol) => (b.left, b.right) match {
+        case (a: AttributeReference, l: Literal) => Some((a.name, b.symbol, value(l)))
+        case (l: Literal, a: AttributeReference) => Some((a.name, flipped(b.symbol), value(l)))
+        case _ => None
+      }
+    }.flatten
+    val partCols = partitionColumnsOf(spark, table).toSet
+    // a partition value Spark renders differently from its toString
+    // (timestamps, decimals) cannot be matched by path: no hint
+    def renders(v: Any) = scala.util.Try(renderPartValue(v)).isSuccess
+    val partEq: Map[String, Any] = (cmps.collect {
+      case (a, "=", v) if partCols(a) && renders(v) => a -> v
+    } ++ conj.collect {
+      case IsNull(a: AttributeReference) if partCols(a.name) => a.name -> (null: Any)
+    }).toMap
+    val partIn: Map[String, Seq[Any]] = conj.collect {
+      case In(a: AttributeReference, list) if partCols(a.name) && !partEq.contains(a.name) &&
+          list.forall(_.isInstanceOf[Literal]) =>
+        a.name -> list.map(l => value(l.asInstanceOf[Literal]))
+    }.filter(_._2.forall(renders)).toMap
+    val lo = scala.collection.mutable.Map[String, Any]()
+    val hi = scala.collection.mutable.Map[String, Any]()
+    cmps.foreach { case (a, op, v) =>
+      if (v != null) {
+        if (op != "<" && op != "<=") lo.getOrElseUpdate(a, v)
+        if (op != ">" && op != ">=") hi.getOrElseUpdate(a, v)
       }
     }
+    Skipping(partEq, partIn,
+      (lo.keySet ++ hi.keySet).iterator.map(c => c -> (lo.get(c), hi.get(c))).toMap)
   }
 
-  /** Composed manifest-level skipping read: visible files of `version`
-    * surviving BOTH the partition-equality filter (pure path parsing;
-    * only registered partition columns participate) AND the stats
-    * bands, with deletion vectors still applied — the planning entry
-    * the SQL scan uses so a pushed `WHERE day = 'x' AND price >= y`
-    * schedules tasks ONLY over possibly-matching files. The CALLER
-    * still applies the exact predicates (survivors are a superset).
-    * Returns the DataFrame plus the (kept, visible) file counts for
-    * the scan description. */
-  def readPruned(spark: SparkSession, table: String, version: Option[Long],
-      partitionEq: Map[String, Any],
-      bands: Map[String, (Option[Any], Option[Any])],
-      partitionIn: Map[String, Seq[Any]] = Map.empty): (DataFrame, Int, Int) = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
-    val st = stateAt(spark, table, v)
-    var keep = st.files
-    if (partitionEq.nonEmpty)
-      keep = keep.intersect(
-        partitionPrunedFiles(spark, table, partitionEq, Some(v)))
-    // IN-list on a partition column (the backfill/retention shape
-    // `WHERE day IN (…)`): per column, a file survives if ANY listed
-    // value matches — union of per-value survivors, intersected across
-    // columns; still pure path parsing
-    partitionIn.foreach { case (c, vs) =>
-      val surv = vs.iterator
-        .map(x => partitionPrunedFiles(spark, table, Map(c -> x), Some(v)).toSet)
-        .foldLeft(Set.empty[String])(_ ++ _)
-      keep = keep.filter(surv)
+  /** `st`'s files (version `v`) that may hold a row matching `where` — a
+    * no-false-negative superset: a file survives every partition hint
+    * its path satisfies, and every stats band unless its recorded
+    * envelope is disjoint from the band or all-NULL (range predicates
+    * never match NULL). Files with no recorded stats and bounds whose
+    * type does not match the column's stats (a numeric bound against
+    * string stats would compare lexicographically) never prune. Pure
+    * log fold: no data file is opened. */
+  private def survivors(spark: SparkSession, table: String, v: Long, st: State,
+      where: Column): Seq[String] = {
+    val sk = skipping(spark, table, st, where)
+    lazy val folded = statsFold(spark, table, v)
+    def inBand(f: String) = sk.bands.forall { case (c, (lo, hi)) =>
+      fileStatsOf(folded, f).flatMap(_.get(c)) match {
+        case None => true
+        case Some(cs) if (lo ++ hi).exists(!boundComparable(cs.typ, _)) => true
+        case Some(cs) => cs.hasValues &&
+          lo.forall(b => cmpStats(cs.typ, cs.max, b) >= 0) &&
+          hi.forall(b => cmpStats(cs.typ, cs.min, b) <= 0)
+      }
     }
-    if (bands.nonEmpty)
-      keep = keep.intersect(
-        statsPrunedFilesBands(spark, table, bands, Some(v)))
-    (readState(spark, table, st.copy(files = keep)), keep.size, st.files.size)
+    st.files.filter(f => partitionMatches(f, sk.partitionEq) &&
+      sk.partitionIn.forall { case (c, vs) => vs.exists(x => partitionMatches(f, Map(c -> x))) } &&
+      inBand(f))
   }
 
-  /** [[read]] restricted to [[statsPrunedFiles]]'s survivors, with the
-    * version's deletion vectors still applied — the zero-extra-scan
-    * skipping read for range queries on a stats-indexed snapshot table.
-    * The CALLER must still apply the exact `[lo, hi]` predicate: the
-    * survivor set is a superset only with respect to matching rows. */
-  def readStatsPruned(spark: SparkSession, table: String, c: String,
-      lo: Any, hi: Any, version: Option[Long] = None): DataFrame =
-    readStatsPrunedBox(spark, table, Map(c -> (lo, hi)), version)
-
-  /** [[readStatsPrunedBox]]: the multi-column box twin of
-    * [[readStatsPruned]] — scan only files surviving EVERY band, DVs
-    * still applied; the caller applies the exact box predicate. */
-  def readStatsPrunedBox(spark: SparkSession, table: String,
-      box: Map[String, (Any, Any)], version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
-    val st = stateAt(spark, table, v)
-    val keep = statsPrunedFilesBox(spark, table, box, Some(v))
-    readState(spark, table, st.copy(files = keep))
+  /** Visible files of `version` (default latest) that may hold a row
+    * matching `where` — the survivor set [[read]] with a predicate
+    * scans. Planning only: no data file is opened. */
+  def prunedFiles(spark: SparkSession, table: String, where: Column,
+      version: Option[Long] = None): Seq[String] = {
+    val v = versionOrLatest(spark, table, version)
+    survivors(spark, table, v, stateAt(spark, table, v), where)
   }
+
+  /** The skipping hints a read of `version` derives from `where`, as
+    * the SQL scan describes them (`partPrune=[…] statsBands=[…]`). */
+  private[graft] def describeSkipping(spark: SparkSession, table: String,
+      version: Long, where: Column): String =
+    skipping(spark, table, stateAt(spark, table, version), where).describe
 
   /** Metadata-only COUNT(*) at `version` (default latest): sums the
     * per-file row counts recorded at commit time from the write's own
@@ -1764,8 +1796,7 @@ object Snapshots {
     * touching a data byte. */
   def countAt(spark: SparkSession, table: String,
       version: Option[Long] = None): Option[Long] = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table, version)
     val st = stateAt(spark, table, v)
     fileRowTotalAt(spark, table, v).map { total =>
       if (st.dvs.isEmpty) total
@@ -1793,11 +1824,6 @@ object Snapshots {
         .collect { case cs if cs.hasValues => cs.min.asInstanceOf[Long] })
     if (per.exists(_.isEmpty)) None else Some(per.map(_.get).sum)
   }
-
-  /** Whether `version`'s state carries deletion vectors (drives whether
-    * [[fileRowTotalAt]] is exact or an upper bound). */
-  private[graft] def hasDvsAt(spark: SparkSession, table: String,
-      version: Long): Boolean = stateAt(spark, table, version).dvs.nonEmpty
 
   /** TIMESTAMP AS OF: read the newest version whose commit time is
     * at-or-before `tsMillis` (manifest `ts`, driver clock at commit) —
@@ -2039,10 +2065,15 @@ object Snapshots {
     * footer on the driver, or inferred where the footer holds no Spark
     * schema, once per file ([[schemaOfFile]]). */
   private def scanFiles(spark: SparkSession, table: String, files: Seq[String],
-      schemas: Map[String, StructType]): DataFrame = {
+      schemas: Map[String, StructType]): DataFrame =
+    spark.read.schema(schemaOf(spark, table, files, schemas)).parquet(files: _*)
+
+  /** The schema a plain read of `files` (non-empty) infers: that of the
+    * file whose path sorts first (see [[scanFiles]]). */
+  private def schemaOf(spark: SparkSession, table: String, files: Seq[String],
+      schemas: Map[String, StructType]): StructType = {
     val first = statsKey(files.minBy(new Path(_).toString))
-    spark.read.schema(schemas.getOrElse(first, schemaOfFile(spark, table, first)))
-      .parquet(files: _*)
+    schemas.getOrElse(first, schemaOfFile(spark, table, first))
   }
 
   /** Schemas of files the log did not record one for, per table and
@@ -2118,8 +2149,7 @@ object Snapshots {
 
   def readWithVersion(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table, version)
     val nameVer: Map[String, Long] = versions(spark, table)
       .filter(_ <= v).sorted
       .flatMap { mv =>
@@ -2157,8 +2187,7 @@ object Snapshots {
     * pay it when the table actually evolves. */
   def readEvolved(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, table)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val v = versionOrLatest(spark, table, version)
     readState(spark, table, stateAt(spark, table, v), mergeSchema = true)
   }
 
@@ -2182,8 +2211,7 @@ object Snapshots {
   def compactLatest(spark: SparkSession, table: String,
       targetRowsPerFile: Long, zorderCols: Seq[String] = Seq.empty): Long = {
     require(targetRowsPerFile > 0, "compactLatest: targetRowsPerFile must be > 0")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val st = stateAt(spark, table, base)
     val snap = readState(spark, table, st)
     val laid =
@@ -2214,8 +2242,7 @@ object Snapshots {
       targetRowsPerFile: Long, smallFileMaxBytes: Long,
       minFiles: Int = 2): Cow = {
     require(targetRowsPerFile > 0, "compactSmall: targetRowsPerFile must be > 0")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val st = stateAt(spark, table, base)
     val f = fs(spark, table)
     // one listStatus per parent commit dir, not one RPC per file
@@ -2268,12 +2295,14 @@ object Snapshots {
     *       Snapshots.commitBatch(spark, table, df, id); () } }}} */
   def commitBatch(spark: SparkSession, table: String, df: DataFrame,
       batchId: Long): Option[Long] = {
-    val committed = versions(spark, table)
-      .map(readManifest(spark, table, _))
-      .exists(_.batchId.contains(batchId))
-    if (committed) None
+    if (batchCommitted(spark, table, batchId)) None
     else Some(commitWith(spark, table, df, overwrite = false, Some(batchId)))
   }
+
+  /** Whether a manifest already records `batchId` — the replay check of
+    * the exactly-once `foreachBatch` sinks. */
+  private def batchCommitted(spark: SparkSession, table: String, batchId: Long): Boolean =
+    versions(spark, table).exists(readManifest(spark, table, _).batchId.contains(batchId))
 
   /** Outcome of a copy-on-write commit: the committed version (None if
     * nothing matched — no commit was made) and the rewrite's footprint,
@@ -2296,21 +2325,24 @@ object Snapshots {
     * so discovery itself skips files the index already rules out. */
   def touchedFiles(spark: SparkSession, table: String, cond: Column,
       candidates: Option[Seq[String]] = None): Seq[String] = {
-    val st = stateAt(spark, table,
-      latestVersion(spark, table).getOrElse(
-        throw new IllegalArgumentException(s"no snapshot committed at $table")))
-    val visible = st.files
-    // candidates may arrive in `_metadata.file_path` URI form (the
-    // skipping layer's key); normalize both sides through hadoop Path
-    val scan = candidates
-      .map(_.map(new Path(_).toString).filter(visible.toSet))
-      .getOrElse(visible)
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
+    val scan = scanSet(st, candidates)
     if (scan.isEmpty) return Seq.empty
     touchedFilesPlan(spark, table, scan, cond, st.schemas).collect()
       // normalize through hadoop Path: the manifest stores
       // FileSystem-qualified paths, _metadata a URI form
       .map(r => normPath(r.getString(0))).toSeq.sorted
   }
+
+  /** The visible files of `st` a discovery scan covers: those named in
+    * `candidates` (a pre-pruned subset), else all. Candidates may arrive
+    * in `_metadata.file_path` URI form (the skipping layer's key), so
+    * both sides compare through hadoop Path. */
+  private def scanSet(st: State, candidates: Option[Seq[String]]): Seq[String] =
+    candidates.fold(st.files) { c =>
+      val named = c.map(new Path(_).toString).toSet
+      st.files.filter(f => named(new Path(f).toString))
+    }
 
   /** The discovery scan as a DataFrame (PlanSpec pins its shape: the
     * predicate pushes into the parquet scan and only the predicate's
@@ -2344,8 +2376,7 @@ object Snapshots {
 
   def deleteWhere(spark: SparkSession, table: String, cond: Column,
       candidates: Option[Seq[String]] = None): Cow = {
-    val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
     val touched = touchedFiles(spark, table, cond, candidates)
     if (touched.isEmpty) return Cow(None, 0, st.files.size)
     val kept = readFilesWithDvs(spark, table, st, touched)
@@ -2380,8 +2411,7 @@ object Snapshots {
     * resurrecting rows. */
   def deleteRange(spark: SparkSession, table: String, c: String,
       lo: Any, hi: Any, zm: Option[DataFrame] = None): Cow = {
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val st = stateAt(spark, table, base)
     val visible = st.files
     // classification source, best-first: (a) stats-in-log — the fold
@@ -2453,8 +2483,7 @@ object Snapshots {
     * [[deleteWhere]]. */
   def updateWhere(spark: SparkSession, table: String, cond: Column,
       set: Map[String, Column], candidates: Option[Seq[String]] = None): Cow = {
-    val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
     val touched = touchedFiles(spark, table, cond, candidates)
     if (touched.isEmpty) return Cow(None, 0, st.files.size)
     // stage every new value against the OLD row first, then swap — so
@@ -2495,8 +2524,7 @@ object Snapshots {
       batchIdOpt: Option[Long] = None,
       candidates: Option[Seq[String]] = None): Cow = {
     require(keyCols.nonEmpty, "mergeInto: at least one key column")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val snap = read(spark, table, Some(base))
     require(source.columns.sorted.sameElements(snap.columns.sorted),
       s"mergeInto: source columns ${source.columns.mkString(",")} must match " +
@@ -2510,12 +2538,10 @@ object Snapshots {
     // and the duplicate-key validation rides the same pass
     val srcKeys = frozenSourceKeys(spark, source, keyCols, validate, "mergeInto")
     val keyEq = keyCols.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val scanSet = candidates
-      .map(_.map(new Path(_).toString).filter(visible.map(new Path(_).toString).toSet))
-      .getOrElse(visible)
+    val scan = scanSet(st, candidates)
     val touched =
-      if (scanSet.isEmpty) Seq.empty[String]
-      else scanFiles(spark, table, scanSet, st.schemas)
+      if (scan.isEmpty) Seq.empty[String]
+      else scanFiles(spark, table, scan, st.schemas)
         .select(col("_metadata.file_path").as("__file") +: keyCols.map(col): _*)
         .as("t")
         .join(srcKeys.as("s"), keyEq, "left_semi")
@@ -2546,8 +2572,11 @@ object Snapshots {
     * Returns the new version. */
   def restore(spark: SparkSession, table: String, version: Long): Long = {
     val st = stateAt(spark, table, version) // loud on unknown/vacuumed
+    // the fold already holds the restored files' stats and schemas, as
+    // for a shallow clone; only files the log lacks them for open a footer
     commitManifest(spark, table, st.files, "overwrite", None,
-      dvs = st.dvs, restoredFrom = Some(version), dvRefs = st.dvRefs)
+      dvs = st.dvs, restoredFrom = Some(version), dvRefs = st.dvRefs,
+      logStats = statsFold(spark, table, version), logSchemas = st.schemas)
   }
 
   /** Idempotent streaming MERGE — the `foreachBatch` + upsert pattern
@@ -2561,10 +2590,7 @@ object Snapshots {
     *       Snapshots.mergeBatch(spark, table, df, Seq("key"), id); () } }}} */
   def mergeBatch(spark: SparkSession, table: String, source: DataFrame,
       keyCols: Seq[String], batchId: Long): Option[Cow] = {
-    val committed = versions(spark, table)
-      .map(readManifest(spark, table, _))
-      .exists(_.batchId.contains(batchId))
-    if (committed) None
+    if (batchCommitted(spark, table, batchId)) None
     else Some(mergeInto(spark, table, source, keyCols, batchIdOpt = Some(batchId)))
   }
 
@@ -2628,17 +2654,14 @@ object Snapshots {
     * REWRITE of a referenced file fails the commit loudly. */
   def deleteWhereMor(spark: SparkSession, table: String, cond: Column,
       candidates: Option[Seq[String]] = None): Cow = {
-    val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
     // ONE column-pruned pass finds the matching positions directly —
     // the position projection IS the discovery (unlike COW, which
     // needs the touched FILE set before it can plan the rewrite);
     // `candidates` bounds it to the skipping layer's survivors
-    val scanSet = candidates
-      .map(_.map(new Path(_).toString).filter(st.files.map(new Path(_).toString).toSet))
-      .getOrElse(st.files)
-    if (scanSet.isEmpty) return Cow(None, 0, st.files.size)
-    val matches = scanFiles(spark, table, scanSet, st.schemas)
+    val scan = scanSet(st, candidates)
+    if (scan.isEmpty) return Cow(None, 0, st.files.size)
+    val matches = scanFiles(spark, table, scan, st.schemas)
       .where(cond)
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("row_index"))
@@ -2677,8 +2700,7 @@ object Snapshots {
       batchIdOpt: Option[Long] = None,
       candidates: Option[Seq[String]] = None): Cow = {
     require(keyCols.nonEmpty, "mergeIntoMor: at least one key column")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table"))
+    val base = versionOrLatest(spark, table)
     val snap = read(spark, table, Some(base))
     require(source.columns.sorted.sameElements(snap.columns.sorted),
       s"mergeIntoMor: source columns ${source.columns.mkString(",")} must match " +
@@ -2687,15 +2709,13 @@ object Snapshots {
     // one pass over the source batch: frozen keys + duplicate-key check
     val srcKeys = frozenSourceKeys(spark, source, keyCols, validate, "mergeIntoMor")
     val keyEq = keyCols.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val scanSet = candidates
-      .map(_.map(new Path(_).toString).filter(st.files.map(new Path(_).toString).toSet))
-      .getOrElse(st.files)
+    val scan = scanSet(st, candidates)
     // positions of live matched target rows — the DV delta
     val matches =
-      if (scanSet.isEmpty)
+      if (scan.isEmpty)
         spark.emptyDataFrame
           .select(lit("").as("file_path"), lit(0L).as("row_index")).limit(0)
-      else scanFiles(spark, table, scanSet, st.schemas)
+      else scanFiles(spark, table, scan, st.schemas)
         .select(col("_metadata.file_path").as("file_path") +:
           col("_metadata.row_index").as("row_index") +: keyCols.map(col): _*)
         .as("t")
@@ -2721,10 +2741,7 @@ object Snapshots {
     * at any key distribution; purge on a coarse cadence). */
   def mergeBatchMor(spark: SparkSession, table: String, source: DataFrame,
       keyCols: Seq[String], batchId: Long): Option[Cow] = {
-    val committed = versions(spark, table)
-      .map(readManifest(spark, table, _))
-      .exists(_.batchId.contains(batchId))
-    if (committed) None
+    if (batchCommitted(spark, table, batchId)) None
     else Some(mergeIntoMor(spark, table, source, keyCols, batchIdOpt = Some(batchId)))
   }
 
@@ -2736,8 +2753,7 @@ object Snapshots {
   final case class DvStats(dirtyFiles: Int, dvRows: Long, dvFiles: Int)
 
   def dvStats(spark: SparkSession, table: String): DvStats = {
-    val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
     if (st.dvs.isEmpty) return DvStats(0, 0L, 0)
     val visible = st.files.map(new Path(_).toString).toSet
     // stale DV rows (their file already rewritten away) are not debt
@@ -2753,8 +2769,7 @@ object Snapshots {
     * per-batch MOR landings. Conflicts: a racing MOR delete fails the
     * commit (its DV would be silently cleared); rerun after it. */
   def purgeDeletes(spark: SparkSession, table: String): Cow = {
-    val st = stateAt(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $table")))
+    val st = stateAt(spark, table, versionOrLatest(spark, table))
     if (st.dvs.isEmpty) return Cow(None, 0, st.files.size)
     val dvFiles = dvRefsOf(spark, st.dvs, st.dvRefs).map(r => normPath(r.file)).toSet
     val dirty = st.files.filter(f => dvFiles.contains(new Path(f).toString)).sorted
@@ -2788,8 +2803,7 @@ object Snapshots {
     * commit) before reclaiming. */
   def cloneShallow(spark: SparkSession, src: String, dst: String,
       version: Option[Long] = None): Long = {
-    val v = version.orElse(latestVersion(spark, src)).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot committed at $src"))
+    val v = versionOrLatest(spark, src, version)
     val st = stateAt(spark, src, v)
     require(latestVersion(spark, dst).isEmpty,
       s"cloneShallow: $dst already has a snapshot log")

@@ -314,9 +314,8 @@ object NonSql {
     graft.operators.Snapshots.commit(s, tmp,
       base.filter($"o_orderkey" % 2 =!= 0).repartitionByRange(4, $"o_totalprice"))
     graft.operators.Snapshots.deleteWhereMor(s, tmp, $"o_custkey" % 10 === 0)
-    graft.operators.Snapshots.readStatsPruned(s, tmp,
-      "o_totalprice", 50000.0, 150000.0)
-      .where($"o_totalprice".between(50000.0, 150000.0))
+    graft.operators.Snapshots.read(s, tmp, None,
+      $"o_totalprice".between(50000.0, 150000.0))
       .orderBy($"o_orderkey")
   }
 

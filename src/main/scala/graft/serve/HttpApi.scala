@@ -38,7 +38,7 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
   // TCP_NODELAY on the JDK server's sockets: sendResponseHeaders and
   // the body write land in separate small segments, and Nagle +
   // delayed-ACK puts a ~40 ms stall between them on EVERY response
-  // (ServeBench measured a 44 ms p50 floor on /health). CAVEAT: the
+  // (a 44 ms p50 floor was measured on /health). CAVEAT: the
   // property is read ONCE when the JDK server classes initialize — if
   // the embedding JVM created any com.sun.net.httpserver server before
   // the first HttpApi, this line is a silent no-op; pass

@@ -140,38 +140,11 @@ private[sources] object SnapshotSource {
     base.add("_change_type", org.apache.spark.sql.types.StringType,
       nullable = false)
 
-  /** Manifest-level skipping hints from pushed conjuncts (shared by
-    * the batch scan and the streaming initial snapshot): equality and
-    * IN-lists on REGISTERED partition columns prune by path parsing,
-    * comparison bounds become open-ended stats bands. Weaker-than-exact
-    * bounds are safe (survivors are a superset — Spark re-applies every
-    * filter above the scan), so first-seen per side suffices, and a
-    * strict `>` sharing its bound with the inclusive band keeps at most
-    * one boundary file too many. */
-  def pruningHints(pushed: Seq[sources.Filter], partCols: Set[String]): (Map[String, Any], Map[String, (Option[Any], Option[Any])], Map[String, Seq[Any]]) = {
-    val partEq: Map[String, Any] = pushed.collect {
-      case sources.EqualTo(a, v) if partCols(a) => a -> (v: Any)
-      case sources.IsNull(a) if partCols(a) => a -> (null: Any)
-    }.toMap
-    val partIn: Map[String, Seq[Any]] = pushed.collect {
-      case sources.In(a, vs) if partCols(a) && !partEq.contains(a) =>
-        a -> vs.toSeq
-    }.toMap
-    val lo = scala.collection.mutable.Map[String, Any]()
-    val hi = scala.collection.mutable.Map[String, Any]()
-    pushed.foreach {
-      case sources.EqualTo(a, v) if v != null =>
-        lo.getOrElseUpdate(a, v); hi.getOrElseUpdate(a, v): Unit
-      case sources.GreaterThan(a, v) if v != null => lo.getOrElseUpdate(a, v): Unit
-      case sources.GreaterThanOrEqual(a, v) if v != null => lo.getOrElseUpdate(a, v): Unit
-      case sources.LessThan(a, v) if v != null => hi.getOrElseUpdate(a, v): Unit
-      case sources.LessThanOrEqual(a, v) if v != null => hi.getOrElseUpdate(a, v): Unit
-      case _ =>
-    }
-    val bands = (lo.keySet ++ hi.keySet).iterator
-      .map(c => c -> (lo.get(c), hi.get(c))).toMap
-    (partEq, bands, partIn)
-  }
+  /** The AND of every convertible pushed filter (`true` when none) —
+    * the predicate a scan hands to [[Snapshots.read]], which derives
+    * its manifest-level skipping from it. */
+  def predicate(filters: Seq[sources.Filter]): Column =
+    filters.flatMap(filterToColumn).reduceOption(_ && _).getOrElse(lit(true))
 
   /** Best-effort `sources.Filter` → `Column` conversion for pushing
     * into the inner plan. `None` = not convertible (the filter is
@@ -278,9 +251,7 @@ class SnapshotV2Table(path: String, version: Long, cdc: Boolean = false,
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
     val spark = SparkSession.active
-    val cond = filters.flatMap(SnapshotSource.filterToColumn(_))
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
+    val cond = SnapshotSource.predicate(filters.toSeq)
     val cow = Snapshots.properties(spark, path)
       .get("delete.mode").exists(_.equalsIgnoreCase("cow"))
     if (cow) Snapshots.deleteWhere(spark, path, cond)
@@ -369,10 +340,6 @@ class SnapshotScanBuilder(path: String, version: Long, full: StructType,
       pushedCount = metaCount; true
     }
 
-  private def pruningHints(spark: SparkSession): (Map[String, Any], Map[String, (Option[Any], Option[Any])], Map[String, Seq[Any]]) =
-    SnapshotSource.pruningHints(pushed.toSeq,
-      Snapshots.partitionColumnsOf(spark, path).toSet)
-
   override def build(): Scan = {
     val spark = SparkSession.active
     pushedCount.foreach { n =>
@@ -386,10 +353,10 @@ class SnapshotScanBuilder(path: String, version: Long, full: StructType,
         mk, SnapshotStreamConfig(path, cdc, None, None), Seq.empty,
         () => Some(1L))
     }
-    val (partEq, bands, partIn) = pruningHints(spark)
+    val where = SnapshotSource.predicate(pushed.toSeq)
     // the batch plan is a thunk: a pure streaming scan never builds it
     val mkBatch = () => {
-      var df =
+      val df =
         if (version < 0L) {
           // CREATE'd, never committed: an empty relation of the
           // declared shape (a later commit is a NEW table resolution)
@@ -413,18 +380,13 @@ class SnapshotScanBuilder(path: String, version: Long, full: StructType,
           val to = Option(options.get("endingVersion"))
             .map(v => if (v == "latest") version else parseV("endingVersion", v))
             .getOrElse(version)
-          Snapshots.changeFeed(spark, path, from, to)
-        } else if (partEq.isEmpty && bands.isEmpty && partIn.isEmpty) {
-          Snapshots.read(spark, path, Some(version))
+          Snapshots.changeFeed(spark, path, from, to).where(where)
         } else {
-          // manifest-level skipping: pushed partition equality + stats
-          // bands shrink the planned FILE LIST before any task is
-          // scheduled (zero data files opened to decide); every pushed
-          // filter is still re-applied above, so the conservative
-          // superset contract is enough
-          Snapshots.readPruned(spark, path, Some(version), partEq, bands, partIn)._1
+          // manifest-level skipping: the pushed predicate's partition
+          // and stats hints shrink the planned FILE LIST before any task
+          // is scheduled (zero data files opened to decide)
+          Snapshots.read(spark, path, Some(version), where)
         }
-      pushed.flatMap(SnapshotSource.filterToColumn).foreach(c => df = df.where(c))
       df.select(required.fieldNames.map(col).toIndexedSeq: _*)
     }
     val cfg = SnapshotStreamConfig(path, cdc,
@@ -440,8 +402,8 @@ class SnapshotScanBuilder(path: String, version: Long, full: StructType,
       else Snapshots.fileRowTotalAt(SparkSession.active, path, version)
     new SnapshotScan(required,
       s"graft-snapshot $path v$version" +
-        (if (partEq.nonEmpty || partIn.nonEmpty) (partEq.keys ++ partIn.keys).mkString(" partPrune=[", ",", "]") else "") +
-        (if (bands.nonEmpty) bands.keys.mkString(" statsBands=[", ",", "]") else ""),
+        (if (cdc || version < 0L) ""
+        else Snapshots.describeSkipping(spark, path, version, where)),
       mkBatch, cfg, pushed.toSeq, rowEstimate)
   }
 }

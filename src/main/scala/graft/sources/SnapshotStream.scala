@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
@@ -127,13 +127,12 @@ class SnapshotMicroBatchStream(cfg: SnapshotStreamConfig,
 
   override def reportLatestOffset(): Offset = VersionOffset(latest())
 
-  /** Pushed pruning/filters re-applied to each batch's inner plan (all
+  /** The pushed filters as one predicate, split for the initial
+    * snapshot: `_change_type` exists only on the change-feed shape, so
+    * filters on it apply after the snapshot read adds the column (all
     * filters are also residual above the scan — see the batch path). */
-  private def shape(df0: DataFrame): DataFrame = {
-    var df = df0
-    pushed.flatMap(SnapshotSource.filterToColumn).foreach(c => df = df.where(c))
-    df.select(required.fieldNames.toIndexedSeq.map(col): _*)
-  }
+  private val (onTable, onChangeType) =
+    pushed.partition(!_.references.contains("_change_type"))
 
   // one batch in flight per stream-execution thread: Spark calls
   // planInputPartitions(start, end) then createReaderFactory for the
@@ -146,19 +145,16 @@ class SnapshotMicroBatchStream(cfg: SnapshotStreamConfig,
     if (e <= s) { current = null; return Array.empty }
     val base =
       if (snapshotFirst(s)) {
-        // the initial snapshot honors the pushed manifest-skipping
-        // hints: a filtered stream over a 100 TB table must not scan
-        // every file on batch one (deltas are commit-sized — no prune)
-        val (pe, bands, pin) = SnapshotSource.pruningHints(pushed,
-          Snapshots.partitionColumnsOf(spark, cfg.path).toSet)
-        val b =
-          if (pe.isEmpty && bands.isEmpty && pin.isEmpty)
-            Snapshots.read(spark, cfg.path, Some(e))
-          else Snapshots.readPruned(spark, cfg.path, Some(e), pe, bands, pin)._1
-        if (cfg.cdc) b.withColumn("_change_type", lit("insert")) else b
-      } else if (cfg.cdc) Snapshots.changeFeed(spark, cfg.path, s, e)
-      else Snapshots.readChanges(spark, cfg.path, s, e)
-    val df = shape(base)
+        // the initial snapshot skips by the pushed predicate: a filtered
+        // stream over a 100 TB table must not scan every file on batch
+        // one (deltas are commit-sized — no prune)
+        val b = Snapshots.read(spark, cfg.path, Some(e), SnapshotSource.predicate(onTable))
+        if (cfg.cdc) b.withColumn("_change_type", lit("insert"))
+          .where(SnapshotSource.predicate(onChangeType))
+        else b
+      } else (if (cfg.cdc) Snapshots.changeFeed(spark, cfg.path, s, e)
+        else Snapshots.readChanges(spark, cfg.path, s, e)).where(SnapshotSource.predicate(pushed))
+    val df = base.select(required.fieldNames.toIndexedSeq.map(col): _*)
     // a mid-stream type change cannot be served through the negotiated
     // schema (InternalRow layout is positional) — fail loudly, restart
     // the query to pick up the evolved schema

@@ -88,11 +88,6 @@ object StreamPipeline {
       .load()
   }
 
-  /** Stateless distance enrichment (pipeline.py:51-57). */
-  def withDistance(txns: DataFrame): DataFrame =
-    txns.withColumn("distance_to_merchant",
-      Haversine.haversineMiles(col("lat"), col("lon"), col("merch_lat"), col("merch_long")))
-
   /** A3: per-card sliding-window count. */
   def slidingCount(txns: Dataset[StreamTxn], spec: WindowSpec = NamedDurations): DataFrame =
     txns.toDF()

@@ -239,8 +239,8 @@ object StreamBench {
     spark.stop()
   }
 
-  /** Maintenance-cadence scenario (VERDICT r8 #8) — also runnable alone
-    * via [[MaintBench]]. */
+  /** Maintenance-cadence scenario (VERDICT r8 #8), the last step of
+    * [[main]]. */
   def maintenanceScenario(spark: SparkSession): Unit = {
     import spark.implicits._
     import graft.operators.Snapshots
@@ -366,18 +366,5 @@ object StreamBench {
       f"$retries conflict retries; steady-state: $nFiles files, " +
       f"${debt.dirtyFiles} dirty / ${debt.dvRows} dv rows, read-after $readM%.2f s, " +
       f"$batchIds manifests")
-  }
-}
-
-/** Standalone entry for the maintenance-cadence scenario. */
-object MaintBench {
-  def main(args: Array[String]): Unit = {
-    val spark = Tables.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    StreamBench.maintenanceScenario(spark)
-    spark.stop()
   }
 }

@@ -890,11 +890,10 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     Snapshots.setStatsColumns(spark, t, Seq("o_totalprice", "o_orderstatus"))
     Snapshots.commit(spark, t, base.repartitionByRange(8, $"o_totalprice"))
     val all = Snapshots.filesAt(spark, t, 0L)
-    val keep = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 50000.0, 100000.0)
+    val keep = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(50000.0, 100000.0))
     assert(keep.nonEmpty && keep.size < all.size,
       s"price-clustered layout must prune: kept ${keep.size}/${all.size}")
-    val got = Snapshots.readStatsPruned(spark, t, "o_totalprice", 50000.0, 100000.0)
-      .where($"o_totalprice".between(50000.0, 100000.0))
+    val got = Snapshots.read(spark, t, None, $"o_totalprice".between(50000.0, 100000.0))
     val want = base.filter($"o_totalprice".between(50000.0, 100000.0))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // string stats prune too, on a status-clustered layout
@@ -902,10 +901,9 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     Snapshots.setStatsColumns(spark, t2, Seq("o_orderstatus"))
     Snapshots.commit(spark, t2, base.repartitionByRange(3, $"o_orderstatus"))
     val all2 = Snapshots.filesAt(spark, t2, 0L)
-    val keep2 = Snapshots.statsPrunedFiles(spark, t2, "o_orderstatus", "P", "P")
+    val keep2 = Snapshots.prunedFiles(spark, t2, $"o_orderstatus".between("P", "P"))
     assert(keep2.nonEmpty && keep2.size < all2.size)
-    val gotP = Snapshots.readStatsPruned(spark, t2, "o_orderstatus", "P", "P")
-      .where($"o_orderstatus" === "P")
+    val gotP = Snapshots.read(spark, t2, None, $"o_orderstatus" === "P")
     assert(gotP.count() == base.filter($"o_orderstatus" === "P").count())
   }
 
@@ -920,19 +918,17 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     val v0Files = Snapshots.filesAt(spark, t, 0L).toSet
     // a band far above v0's actual content: the stats-less v0 file is
     // KEPT (no stats — no false negatives), stats'd low files prune
-    val keep = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 400000.0, 500000.0)
+    val keep = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(400000.0, 500000.0))
     assert(v0Files.subsetOf(keep.toSet), "stats-less files must never prune")
     assert(keep.size < Snapshots.filesAt(spark, t, 1L).size)
     // exact results through the pruned read regardless
-    val got = Snapshots.readStatsPruned(spark, t, "o_totalprice", 400000.0, 500000.0)
-      .where($"o_totalprice".between(400000.0, 500000.0))
+    val got = Snapshots.read(spark, t, None, $"o_totalprice".between(400000.0, 500000.0))
     val want = base.filter($"o_totalprice".between(400000.0, 500000.0))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // a COW rewrite's new files carry fresh stats: delete the low band,
     // then a low-band prune keeps nothing stats'd below the cut
     Snapshots.deleteWhere(spark, t, $"o_totalprice" < 80000.0)
-    val got2 = Snapshots.readStatsPruned(spark, t, "o_totalprice", 0.0, 60000.0)
-      .where($"o_totalprice".between(0.0, 60000.0))
+    val got2 = Snapshots.read(spark, t, None, $"o_totalprice".between(0.0, 60000.0))
     assert(got2.isEmpty)
     // an all-NULL stats column prunes under any range
     val t3 = tbl()
@@ -941,7 +937,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       base.limit(100).withColumn("maybe", lit(null).cast("double")).repartition(1))
     Snapshots.commit(spark, t3,
       base.limit(100).withColumn("maybe", $"o_totalprice").repartition(1))
-    val keep3 = Snapshots.statsPrunedFiles(spark, t3, "maybe", 0.0, 1e9)
+    val keep3 = Snapshots.prunedFiles(spark, t3, $"maybe".between(0.0, 1e9))
     assert(keep3.size == 1, s"all-NULL file must prune, got ${keep3.size}")
     // a TYPE-MISMATCHED bound never prunes (lexicographic compare of a
     // numeric bound against string stats could wrongly drop a file)
@@ -952,7 +948,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
         .select($"o_orderkey", $"o_orderstatus")
         .repartitionByRange(3, $"o_orderstatus"))
     val allFiles = Snapshots.filesAt(spark, t4, 0L).size
-    assert(Snapshots.statsPrunedFiles(spark, t4, "o_orderstatus", 0, 1).size == allFiles,
+    assert(Snapshots.prunedFiles(spark, t4, $"o_orderstatus".between(0, 1)).size == allFiles,
       "numeric bounds against string stats must disable pruning, not misprune")
   }
 
@@ -970,8 +966,8 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     val n = Snapshots.read(spark, t).count()
     // the band's UNSCALED shadow [10..20] sits inside [5, 25]; no actual
     // value (0.10..0.20) does — neither pruning nor deleteRange may act
-    assert(Snapshots.statsPrunedFiles(spark, t, "amt",
-      new java.math.BigDecimal("5.0"), new java.math.BigDecimal("25.0")).size ==
+    assert(Snapshots.prunedFiles(spark, t, $"amt".between(
+      new java.math.BigDecimal("5.0"), new java.math.BigDecimal("25.0"))).size ==
       Snapshots.filesAt(spark, t, 0L).size,
       "decimal stats must not be recorded — pruning must stay conservative")
     val cow = Snapshots.deleteRange(spark, t, "amt",
@@ -992,23 +988,22 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     val all = Snapshots.filesAt(spark, t, 0L).size
     val lo = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(10 * 3600))
     val hi = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(20 * 3600))
-    val keepT = Snapshots.statsPrunedFiles(spark, t, "t", lo, hi)
+    val keepT = Snapshots.prunedFiles(spark, t, $"t".between(lo, hi))
     assert(keepT.nonEmpty && keepT.size < all,
       s"timestamp bounds must prune a time-clustered layout: ${keepT.size}/$all")
-    val gotT = Snapshots.readStatsPruned(spark, t, "t", lo, hi)
-      .where($"t".between(lit(lo), lit(hi)))
+    val gotT = Snapshots.read(spark, t, None, $"t".between(lit(lo), lit(hi)))
     assert(gotT.count() == 11) // hours 10..20 inclusive
     // Instant bounds take the same path
-    assert(Snapshots.statsPrunedFiles(spark, t, "t",
+    assert(Snapshots.prunedFiles(spark, t, $"t".between(
       java.time.Instant.ofEpochSecond(10 * 3600),
-      java.time.Instant.ofEpochSecond(20 * 3600)).toSet == keepT.toSet)
+      java.time.Instant.ofEpochSecond(20 * 3600))).toSet == keepT.toSet)
     // date bounds prune too
     val dLo = java.sql.Date.valueOf("2020-02-01")
     val dHi = java.time.LocalDate.parse("2020-03-01")
-    val keepD = Snapshots.statsPrunedFiles(spark, t, "d", dLo, dHi)
+    val keepD = Snapshots.prunedFiles(spark, t, $"d".between(dLo, dHi))
     assert(keepD.nonEmpty && keepD.size < all)
-    val gotD = Snapshots.readStatsPruned(spark, t, "d", dLo, dHi)
-      .where($"d".between(lit(dLo), lit(java.sql.Date.valueOf("2020-03-01"))))
+    val gotD = Snapshots.read(spark, t, None,
+      $"d".between(lit(dLo), lit(java.sql.Date.valueOf("2020-03-01"))))
     val wantD = Snapshots.read(spark, t)
       .where($"d".between(lit(dLo), lit(java.sql.Date.valueOf("2020-03-01"))))
     assert(gotD.count() == wantD.count() && gotD.count() > 0)
@@ -1032,10 +1027,87 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     val smiley = new String(Character.toChars(0x1F600))
     Snapshots.commit(spark, t,
       Seq("￿", smiley).toDF("s").repartition(1))
-    val keep = Snapshots.statsPrunedFiles(spark, t, "s", "￿", "￿")
+    val keep = Snapshots.prunedFiles(spark, t, $"s".between("￿", "￿"))
     assert(keep.size == 1, "file containing the bound value must survive pruning")
-    assert(Snapshots.readStatsPruned(spark, t, "s", "￿", "￿")
-      .where($"s" === "￿").count() == 1)
+    assert(Snapshots.read(spark, t, None, $"s" === "￿").count() == 1)
+  }
+
+  test("read with a predicate equals read-then-filter, and prunes only files with no match") {
+    // partitioned (p: four values + NULL), stats on every data column,
+    // range-clustered on k (ts and d follow k), standing deletion vectors
+    val t = tbl()
+    Snapshots.setPartitionColumns(spark, t, Seq("p"))
+    Snapshots.setStatsColumns(spark, t, Seq("k", "x", "ts", "d", "s"))
+    Snapshots.commit(spark, t, spark.range(0, 4000).select(
+      $"id".as("k"),
+      when($"id" % 5 === 0, lit(null)).otherwise(concat(lit("p"), ($"id" % 4).cast("string"))).as("p"),
+      ($"id" * 7 % 1000).cast("double").as("x"),
+      timestamp_seconds($"id" * 60).as("ts"),
+      date_add(lit("2020-01-01").cast("date"), ($"id" / 10).cast("int")).as("d"),
+      $"id".cast("string").as("s"))
+      .repartitionByRange(4, $"k"))
+    Snapshots.deleteWhereMor(spark, t, $"k" % 7 === 0)
+    val v = Snapshots.latestVersion(spark, t).get
+    val all = Snapshots.filesAt(spark, t, v).size
+    def uri(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    def kept(w: org.apache.spark.sql.Column) =
+      Snapshots.prunedFiles(spark, t, w, Some(v)).map(uri).toSet
+    def check(w: org.apache.spark.sql.Column): Set[String] = {
+      val want = Snapshots.read(spark, t, Some(v)).where(w)
+      val got = Snapshots.read(spark, t, Some(v), w)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"rows differ under $w")
+      val holding = want.select(input_file_name()).distinct().as[String].collect().map(uri).toSet
+      val k = kept(w)
+      assert(holding.nonEmpty && holding.subsetOf(k), s"$w pruned a file holding a match")
+      k
+    }
+    def ts(id: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(id * 60))
+    val day = (n: Int) => java.sql.Date.valueOf(java.time.LocalDate.parse("2020-01-01").plusDays(n))
+    // partition =, IS NULL and IN prune by path
+    val p2 = check($"p" === "p2")
+    assert(p2.size < all)
+    assert(check($"p".isNull).size < all)
+    assert(check($"p".isin("p0", "p2")).size < all)
+    // one-sided and closed bands, a two-column box
+    assert(check($"k" >= 3000L).size < all)
+    val kBand = check($"k".between(1000L, 1500L))
+    assert(kBand.size < all)
+    val tsBand = check($"ts".between(lit(ts(1000)), lit(ts(1500))))
+    val box = check($"k".between(1000L, 1500L) && $"ts".between(lit(ts(1200)), lit(ts(3000))))
+    assert(box.size <= math.min(kBand.size, tsBand.size) && box.size < all)
+    // timestamp and date bands
+    assert(check($"ts" >= lit(ts(3000))).size < all)
+    assert(check($"d".between(lit(day(100)), lit(day(150)))).size < all)
+    // a numeric literal on a string column casts the column: no pruning
+    assert(check($"s" >= 9).size == all)
+    // a UDF conjunct gives no hint; the partition conjunct still prunes
+    val even = udf((k: Long) => k % 2 == 0)
+    assert(check(even($"k") && $"p" === "p2") == p2)
+    assert(check(even($"k")).size == all)
+    // an OR across columns gives no hint
+    assert(check($"p" === "p0" || $"k" < 100L).size == all)
+  }
+
+  test("restore records the restored files' stats from the log, not their footers") {
+    val t = tbl()
+    Snapshots.setStatsColumns(spark, t, Seq("o_orderkey"))
+    Snapshots.commit(spark, t, orders.repartition(2))
+    // registered after v0: re-reading v0's footers would record it too
+    Snapshots.setStatsColumns(spark, t, Seq("o_orderkey", "o_custkey"))
+    Snapshots.commit(spark, t, orders.limit(10))
+    val v = Snapshots.restore(spark, t, 0L)
+    val fsys = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def manifest(n: Long) = {
+      val in = fsys.open(new org.apache.hadoop.fs.Path(t, f"_graft_log/v$n%011d.json"))
+      try mapper.readTree(in) finally in.close()
+    }
+    assert(manifest(v).get("stats") == manifest(0L).get("stats"),
+      "the restore must record v0's stats exactly")
+    assert(manifest(v).get("schema") == manifest(0L).get("schema"))
+    assert(Snapshots.read(spark, t).exceptAll(orders).isEmpty &&
+      orders.exceptAll(Snapshots.read(spark, t)).isEmpty)
   }
 
   test("vacuum sweeps stranded .tmp-* staging files from the log dir") {
@@ -1119,18 +1191,17 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     val all = Snapshots.filesAt(spark, t, 0L).size
     val custBand: (Any, Any) = (100L, 300L)
     val priceBand: (Any, Any) = (50000.0, 120000.0)
-    val kCust = Snapshots.statsPrunedFiles(spark, t, "o_custkey",
-      custBand._1, custBand._2).size
-    val kPrice = Snapshots.statsPrunedFiles(spark, t, "o_totalprice",
-      priceBand._1, priceBand._2).size
-    val kBox = Snapshots.statsPrunedFilesBox(spark, t,
-      Map("o_custkey" -> custBand, "o_totalprice" -> priceBand)).size
+    val kCust = Snapshots.prunedFiles(spark, t,
+      $"o_custkey".between(custBand._1, custBand._2)).size
+    val kPrice = Snapshots.prunedFiles(spark, t,
+      $"o_totalprice".between(priceBand._1, priceBand._2)).size
+    val kBox = Snapshots.prunedFiles(spark, t,
+      $"o_custkey".between(custBand._1, custBand._2) &&
+        $"o_totalprice".between(priceBand._1, priceBand._2)).size
     assert(kBox <= math.min(kCust, kPrice))
     assert(kBox < all, s"z-order box must prune: $kBox/$all (cust $kCust, price $kPrice)")
-    val got = Snapshots.readStatsPrunedBox(spark, t,
-      Map("o_custkey" -> custBand, "o_totalprice" -> priceBand))
-      .where($"o_custkey".between(100L, 300L) &&
-        $"o_totalprice".between(50000.0, 120000.0))
+    val got = Snapshots.read(spark, t, None,
+      $"o_custkey".between(100L, 300L) && $"o_totalprice".between(50000.0, 120000.0))
     val want = orders.where($"o_custkey".between(100L, 300L) &&
       $"o_totalprice".between(50000.0, 120000.0))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
@@ -1327,12 +1398,11 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       spark.range(1).select(timestamp_micros(lit(200000L)).as("ts")).repartition(1))
     val lo = java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(-600L))
     val hi = java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(-400L))
-    val keep = Snapshots.statsPrunedFiles(spark, t, "ts", lo, hi)
+    val keep = Snapshots.prunedFiles(spark, t, $"ts".between(lo, hi))
     // truncation-toward-zero would shift the band a full second and
     // prune the -0.5 s file (false negative) while keeping +0.2 s
     assert(keep.size == 1, s"kept ${keep.size}")
-    assert(Snapshots.readStatsPruned(spark, t, "ts", lo, hi)
-      .where($"ts".between(lit(lo), lit(hi))).count() == 1)
+    assert(Snapshots.read(spark, t, None, $"ts".between(lit(lo), lit(hi))).count() == 1)
   }
 
   test("null partition on a NON-STRING partition column reads under ANSI; partitioned constraint abort sweeps the whole commit dir") {
@@ -1438,8 +1508,8 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
     // stats pruning keeps exactly the right rows (conservative superset
     // is re-filtered by the caller; here the FULL key range must survive)
     val lo = base.agg(min($"o_orderkey")).head.getLong(0)
-    val pruned = Snapshots.readStatsPruned(spark, t, "o_orderkey", lo, lo)
-    assert(pruned.where($"o_orderkey" === lo).count() == 1)
+    val pruned = Snapshots.read(spark, t, None, $"o_orderkey" === lo)
+    assert(pruned.count() == 1)
   }
 
   test("legacy name-keyed stats on a partitioned table: exact COUNT(*), no file over-pruned") {
@@ -1475,8 +1545,7 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       s"metadata COUNT(*) ${Snapshots.countAt(spark, t)} != ${base.count()}")
     // each partition's own key range must keep its file
     Seq((0L, 10L), (1000L, 1010L), (2000L, 2010L)).foreach { case (lo, hi) =>
-      val kept = Snapshots.readStatsPruned(spark, t, "k", lo, hi)
-        .where($"k".between(lo, hi)).count()
+      val kept = Snapshots.read(spark, t, None, $"k".between(lo, hi)).count()
       assert(kept == hi - lo + 1, s"band [$lo, $hi] kept $kept rows")
     }
   }
@@ -1488,18 +1557,18 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       orders.filter($"o_totalprice" < 100000.0).repartitionByRange(2, $"o_totalprice"))
     Snapshots.commit(spark, t,
       orders.filter($"o_totalprice" >= 100000.0).repartitionByRange(2, $"o_totalprice"))
-    val before = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 0.0, 50000.0).toSet
+    val before = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(0.0, 50000.0)).toSet
     assert(before.size < Snapshots.read(spark, t).inputFiles.length)
     // the checkpoint embeds the folded stats: pruning after it is
     // identical, resolved from the sidecar + newer manifests only
     Snapshots.checkpoint(spark, t)
-    assert(Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 0.0, 50000.0).toSet == before)
+    assert(Snapshots.prunedFiles(spark, t, $"o_totalprice".between(0.0, 50000.0)).toSet == before)
     // a post-checkpoint commit folds on top of the sidecar base
     Snapshots.commit(spark, t,
       orders.limit(20).withColumn("o_totalprice", lit(9e8)).repartition(1))
-    val hi = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 8e8, 1e9)
+    val hi = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(8e8, 1e9))
     assert(hi.size == 1, s"post-checkpoint commit must prune-in alone, kept ${hi.size}")
-    val low = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 0.0, 50000.0).toSet
+    val low = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(0.0, 50000.0)).toSet
     assert(low == before, "the new high-band file must not join a low-band read")
   }
 
@@ -1541,22 +1610,22 @@ class SnapshotSpec extends AnyFunSuite with SparkSuite {
       orders.filter($"o_orderkey" % 2 === 0).repartitionByRange(4, $"o_totalprice"))
     Snapshots.commit(spark, t,
       orders.filter($"o_orderkey" % 2 =!= 0).repartitionByRange(4, $"o_totalprice"))
-    val before = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 50000.0, 80000.0)
+    val before = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(50000.0, 80000.0))
     val total = Snapshots.read(spark, t).count()
     // clone first (parent history intact), then vacuum the parent
     val dst = tbl()
     Snapshots.cloneShallow(spark, t, dst)
     Snapshots.vacuum(spark, t, retainVersions = 1)
-    val afterVacuum = Snapshots.statsPrunedFiles(spark, t, "o_totalprice", 50000.0, 80000.0)
+    val afterVacuum = Snapshots.prunedFiles(spark, t, $"o_totalprice".between(50000.0, 80000.0))
     assert(afterVacuum.toSet == before.toSet,
       "the folded horizon must carry the dropped manifests' stats")
-    val afterClone = Snapshots.statsPrunedFiles(spark, dst, "o_totalprice", 50000.0, 80000.0)
+    val afterClone = Snapshots.prunedFiles(spark, dst, $"o_totalprice".between(50000.0, 80000.0))
     assert(afterClone.toSet == before.toSet,
       "the clone manifest must carry the parent's folded stats")
     // and the branch keeps collecting stats for NEW commits
     Snapshots.commit(spark, dst,
       orders.limit(50).withColumn("o_totalprice", lit(9e8)).repartition(1))
-    val hi = Snapshots.statsPrunedFiles(spark, dst, "o_totalprice", 8e8, 1e9)
+    val hi = Snapshots.prunedFiles(spark, dst, $"o_totalprice".between(8e8, 1e9))
     assert(hi.size == 1, s"branch commit must carry fresh stats, kept ${hi.size}")
     assert(Snapshots.read(spark, t).count() == total)
   }

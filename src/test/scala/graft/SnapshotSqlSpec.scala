@@ -384,14 +384,12 @@ class SnapshotSqlSpec extends AnyFunSuite with SparkSuite {
     // the engine-side survivor sets the scan must reproduce
     val all = Snapshots.filesAt(spark, t,
       Snapshots.latestVersion(spark, t).get).size
-    val partOnly = Snapshots.readPruned(spark, t, None,
-      Map("o_orderpriority" -> "1-URGENT"), Map.empty)
-    val bandOnly = Snapshots.readPruned(spark, t, None, Map.empty,
-      Map("o_totalprice" -> (Some(200000.0): Option[Any], None: Option[Any])))
-    assert(partOnly._2 < partOnly._3 && partOnly._3 == all,
-      s"partition equality must drop files: $partOnly")
-    assert(bandOnly._2 < bandOnly._3,
-      s"a one-sided stats band must drop files: $bandOnly")
+    val partOnly = Snapshots.prunedFiles(spark, t, $"o_orderpriority" === "1-URGENT").size
+    val bandOnly = Snapshots.prunedFiles(spark, t, $"o_totalprice" >= 200000.0).size
+    assert(partOnly < all,
+      s"partition equality must drop files: $partOnly of $all")
+    assert(bandOnly < all,
+      s"a one-sided stats band must drop files: $bandOnly of $all")
 
     // through SQL: result-identical to the relational filter, and the
     // scan description shows the derived hints
@@ -419,9 +417,9 @@ class SnapshotSqlSpec extends AnyFunSuite with SparkSuite {
 
     // IN-list on the partition column (the backfill shape): union of
     // per-value survivors, still pure path parsing
-    val inPrune = Snapshots.readPruned(spark, t, None, Map.empty, Map.empty,
-      Map("o_orderpriority" -> Seq("1-URGENT", "2-HIGH")))
-    assert(inPrune._2 < inPrune._3, s"IN-list must drop files: $inPrune")
+    val inPrune = Snapshots.prunedFiles(spark, t,
+      $"o_orderpriority".isin("1-URGENT", "2-HIGH")).size
+    assert(inPrune < all, s"IN-list must drop files: $inPrune of $all")
     val sql3 = spark.sql("SELECT o_orderkey FROM gsnap10.skip_tbl " +
       "WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')")
     val want3 = Snapshots.read(spark, t)
