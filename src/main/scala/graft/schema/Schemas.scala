@@ -59,6 +59,12 @@ case class CardState(
     txnCount: Option[Long],
     avgAmt: Option[Double])
 
+/** Per-card state of the streaming feature operator
+  * (`StreamPipeline.pipeline`): the card's recent events as parallel
+  * arrays, ascending by event time in epoch microseconds — only those
+  * inside the longest trailing window of the newest event. */
+case class CardWindow(tsMicros: Array[Long], amounts: Array[Double])
+
 /** Online-store stats row (redis_writer.py:27-32 hash fields). */
 case class CardStats(
     cc_num: Long,

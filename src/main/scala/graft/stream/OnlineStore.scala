@@ -44,9 +44,11 @@ class OnlineStore(spark: SparkSession, path: String, ttlSeconds: Long = 86400L) 
   /** TTL retention predicate (redis EXPIRE 86400, redis_writer.py:25,38)
     * + latest-wins per txn_id. Replayed micro-batches produce IDENTICAL
     * rows (same batch_id on retry) and collapse via the full-row
-    * distinct; distinct rows sharing a txn_id are legitimate re-emissions
-    * from [[StreamPipeline.mergeStats]] (each slot update re-emits the
-    * last txn with fresher counts), so keep the max-(last_update,
+    * distinct. [[StreamPipeline.pipeline]] emits one row per event, so
+    * distinct rows share a txn_id only when an event is replayed into
+    * the stream again (a re-produced record, a fresh checkpoint) or a
+    * sink is fed by [[StreamPipeline.mergeStats]], which re-emits the
+    * last txn as its slots update; keep the max-(last_update,
     * batch_id) row rather than an arbitrary one — the Redis hash's
     * last-write-wins semantics. */
   def retained(asOfEpochSec: Long): DataFrame = {

@@ -5,34 +5,40 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.expr.Haversine
-import graft.schema.{CardState, CardStats, Schemas, StreamTxn}
+import graft.schema.{CardState, CardStats, CardWindow, Schemas, StreamTxn}
 
 /** The reference's streaming feature plane (PyFlink `pipeline.py` +
   * `stream_features.py`) re-expressed in Structured Streaming.
   *
-  * Shape: JSON source → typed parse → 5 s watermark → per-card
-  * sliding-window count/avg → stateful latest-wins merge → online sink.
+  * Shape: JSON source → typed parse → ONE keyed stateful operator on
+  * cc_num → online sink. [[pipeline]] scans the source once per
+  * micro-batch and emits exactly one CardStats per event.
   *
   * Scale/design notes:
   *  - The reference chains TWO keyed CoProcessFunctions behind TWO
   *    keyed window operators — four shuffles on cc_num
-  *    (pipeline.py:60,65,69-70,73-74). Here the stateful merge is ONE
-  *    `flatMapGroupsWithState` holding all three slots (raw txn, count,
-  *    avg) in a single `CardState`, and the two window aggregations
-  *    share the same key — Catalyst's EnsureRequirements reuses the
-  *    hash partitioning, so the whole graph shuffles on cc_num once
-  *    per stage boundary instead of four times.
+  *    (pipeline.py:60,65,69-70,73-74). Here one
+  *    `flatMapGroupsWithState` keeps each card's recent (ts, amount)
+  *    pairs and computes both windowed features per event: one
+  *    shuffle, one state store, one row written per event.
   *  - Window semantics: the reference names say 10 min / 1 h but the
   *    Flink code uses 2 min/20 s and 5 min/1 min *processing-time*
-  *    slides (pipeline.py:59-67). We implement *event-time* windows
-  *    with the named durations (600 s/20 s, 3600 s/60 s) — documented
-  *    deviation (SURVEY.md §7.4) — configurable via [[WindowSpec]].
-  *  - State eviction: watermark evicts window state;
-  *    ProcessingTimeTimeout evicts merge state, mirroring the Redis
-  *    TTL (redis_writer.py:25,38).
+  *    slides (pipeline.py:59-67). We compute *event-time* trailing
+  *    windows `(t − size, t]` at each event with the named durations
+  *    (600 s, 3600 s) — the batch plane's features (FeaturePipeline),
+  *    half-open — documented deviation (SURVEY.md §7.4), configurable
+  *    via [[WindowSpec]]. No watermark unless EventTimeTimeout.
+  *  - State eviction: the window horizon prunes each card's pairs;
+  *    ProcessingTimeTimeout drops idle cards, mirroring the Redis TTL
+  *    (redis_writer.py:25,38).
+  *  - [[slidingCount]], [[slidingAvg]] and [[mergeStats]] keep the
+  *    reference's window-then-merge operators as standalone pieces.
   */
 object StreamPipeline {
 
+  /** Window sizes and slides. [[pipeline]] reads only the two sizes
+    * (its windows trail each event); the slides are for
+    * [[slidingCount]] / [[slidingAvg]]. */
   final case class WindowSpec(countSize: String, countSlide: String,
       avgSize: String, avgSlide: String)
   val NamedDurations: WindowSpec = WindowSpec("600 seconds", "20 seconds", "3600 seconds", "60 seconds")
@@ -77,7 +83,7 @@ object StreamPipeline {
     * format `graft-log`): same row schema and offset/admission-control
     * contract as [[kafkaSource]], backed by a partitioned append-only
     * log on shared storage — the ingress the streaming tests drive END
-    * TO END (consume → parse → window → merge → sink, checkpointed
+    * TO END (consume → parse → keyed features → sink, checkpointed
     * restart included), since no Kafka broker/connector exists in this
     * environment. Deployment swaps this `format` for "kafka"; nothing
     * downstream changes. */
@@ -317,28 +323,91 @@ object StreamPipeline {
     2 * Haversine.EarthRadiusMiles * math.asin(math.sqrt(a))
   }
 
-  /** End-to-end streaming feature pipeline: txns → sliding windows →
-    * slot union → latest-wins merge. Runs as ONE streaming query
-    * (Spark 4 supports chained stateful operators); attach
-    * [[OnlineStore.sink]] via foreachBatch for the online plane.
-    * Mirrors pipeline.py:38-80 minus the Kafka/Redis edges. */
+  /** End-to-end streaming feature pipeline: ONE source scan into ONE
+    * keyed stateful operator; attach [[OnlineStore.sink]] via
+    * foreachBatch for the online plane. Mirrors pipeline.py:38-80
+    * minus the Kafka/Redis edges.
+    *
+    * Emits exactly one CardStats per event, stamped with the event's
+    * time: `txn_count_last_10_min` counts the card's known events with
+    * ts in `(t − countSize, t]`, `avg_amt_last_1_hour` averages their
+    * amounts over `(t − avgSize, t]`. Half-open, so two events exactly
+    * one window apart do not count each other. The known events are
+    * the card's retained state plus the whole current micro-batch
+    * (emitted in (ts, txn_id) order); a late event is counted at
+    * arrival against what is retained, and rows already emitted are
+    * not revised. State keeps the pairs with ts > newest − the longer
+    * size.
+    *
+    * `timeout`: NoTimeout keeps state until the window horizon prunes
+    * it and runs no no-data batches; ProcessingTimeTimeout also drops a
+    * card idle for a day; EventTimeTimeout adds a 5 s watermark (rows
+    * behind it are dropped) and drops a card a day of event time after
+    * its newest event. */
   def pipeline(txns: Dataset[StreamTxn], spec: WindowSpec = NamedDurations,
-      timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout): Dataset[CardStats] =
-    mergeStats(toSlots(txns, slidingCount(txns, spec), slidingAvg(txns, spec)),
-      timeout = timeout)
-
-  /** Tag the three derived streams into merge slots (union replaces the
-    * reference's chained `connect`s — one operator, one shuffle). */
-  def toSlots(txns: Dataset[StreamTxn], counts: DataFrame, avgs: DataFrame): Dataset[Slot] = {
+      timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout): Dataset[CardStats] = {
     val spark = txns.sparkSession
     import spark.implicits._
-    val a = txns.map(t => Slot(t.cc_num, Some(t), None, None, t.ts))
-    val b = counts.select(col("cc_num"), col("txn_count"), col("window.end").as("ts"))
-      .as[(Long, Long, Timestamp)]
-      .map { case (cc, n, ts) => Slot(cc, None, Some(n), None, ts) }
-    val c = avgs.select(col("cc_num"), col("avg_amt"), col("window.end").as("ts"))
-      .as[(Long, Double, Timestamp)]
-      .map { case (cc, a0, ts) => Slot(cc, None, None, Some(a0), ts) }
-    a.union(b).union(c)
+    val countUs = intervalMicros(spec.countSize)
+    val avgUs = intervalMicros(spec.avgSize)
+    val horizonUs = math.max(countUs, avgUs)
+    val stateTtlMs = 86400000L
+    val in =
+      if (timeout == GroupStateTimeout.EventTimeTimeout) txns.withWatermark("ts", "5 seconds")
+      else txns
+    in.groupByKey(_.cc_num)
+      .flatMapGroupsWithState[CardWindow, CardStats](OutputMode.Append, timeout) {
+        (cc: Long, events: Iterator[StreamTxn], state: GroupState[CardWindow]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val (batchTs, batch) = events.map(t => (epochMicros(t.ts), t)).toArray
+              .sortBy { case (at, t) => (at, t.txn_id) }.unzip
+            val prior = state.getOption.getOrElse(CardWindow(Array.emptyLongArray, Array.emptyDoubleArray))
+            // the card's known events, ascending by ts (a stable sort)
+            val (ts, amounts) = (prior.tsMicros.zip(prior.amounts) ++
+              batchTs.zip(batch.map(_.amount))).sortBy(_._1).unzip
+            // index of the first known event with ts > bound
+            def after(bound: Long): Int = {
+              var lo = 0; var hi = ts.length
+              while (lo < hi) { val m = (lo + hi) >>> 1; if (ts(m) <= bound) lo = m + 1 else hi = m }
+              lo
+            }
+            val out = batch.indices.map { k =>
+              val t = batch(k)
+              val at = batchTs(k)
+              val end = after(at)
+              val avgFrom = after(at - avgUs)
+              var sum = 0.0
+              var i = avgFrom
+              while (i < end) { sum += amounts(i); i += 1 }
+              CardStats(cc, t.txn_id, t.amount,
+                haversineMiles(t.lat, t.lon, t.merch_lat, t.merch_long),
+                (end - after(at - countUs)).toLong, sum / (end - avgFrom), t.ts)
+            }
+            val newest = ts.last
+            val keep = after(newest - horizonUs)
+            state.update(CardWindow(ts.drop(keep), amounts.drop(keep)))
+            if (timeout == GroupStateTimeout.ProcessingTimeTimeout)
+              state.setTimeoutDuration(stateTtlMs)
+            else if (timeout == GroupStateTimeout.EventTimeTimeout)
+              // clamped past the watermark: setTimeoutTimestamp throws on a
+              // timestamp behind it (a card whose newest event is already
+              // more than the TTL behind)
+              state.setTimeoutTimestamp(math.max(state.getCurrentWatermarkMs() + 1,
+                Math.floorDiv(newest, 1000L) + stateTtlMs))
+            out.iterator
+          }
+      }
+  }
+
+  private def epochMicros(t: Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
+  /** A day-time interval string ("600 seconds", "1 hour") in microseconds. */
+  private def intervalMicros(s: String): Long = {
+    val i = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s))
+    require(i.months == 0, s"window size must not use months: $s")
+    i.days * 86400000000L + i.microseconds
   }
 }

@@ -229,6 +229,55 @@ class LogSourceSpec extends AnyFunSuite with SparkSuite {
     assert(math.abs(best.avg_amt_last_1_hour - 20.0) < 1e-9, best.toString)
   }
 
+  /** The feature pipeline off the source, built identically on both
+    * sides of a restart (same checkpoint → same plan). */
+  private def pipelineQuery(dir: String, ckpt: String,
+      sink: (Long, Seq[graft.schema.CardStats]) => Unit) =
+    StreamPipeline.pipeline(StreamPipeline.parse(StreamPipeline.logTopicSource(spark, dir)),
+        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.schema.CardStats], id: Long) =>
+        sink(id, b.collect().toSeq)
+      }.start()
+
+  test("pipeline checkpointed restart: trailing windows include the card's events from before it") {
+    val dir = newTopic(2)
+    val ckpt = Files.createTempDirectory("graft_log_pipe_ckpt_").toString
+    val emitted = scala.collection.concurrent.TrieMap[Long, Seq[graft.schema.CardStats]]()
+    val run2Batches = scala.collection.mutable.Set[Long]()
+    LogTopic.produce(dir, Seq(
+      LogTopic.ProducerRecord(Some("7"), wireJson("a", 7L, 10.0, "2024-01-01T10:00:00.000000"), 1L),
+      LogTopic.ProducerRecord(Some("7"), wireJson("b", 7L, 20.0, "2024-01-01T10:01:00.000000"), 2L),
+      LogTopic.ProducerRecord(Some("9"), wireJson("c", 9L, 30.0, "2024-01-01T10:02:00.000000"), 3L)))
+    val q1 = pipelineQuery(dir, ckpt, (id, rows) => emitted.put(id, rows): Unit)
+    q1.processAllAvailable(); q1.stop()
+    assert(emitted.values.flatten.map(_.txn_id).toSet == Set("a", "b", "c"), emitted.toString)
+
+    // stop → more events while down → restart from the SAME checkpoint
+    LogTopic.produce(dir, Seq(
+      LogTopic.ProducerRecord(Some("7"), wireJson("d", 7L, 60.0, "2024-01-01T10:03:00.000000"), 4L),
+      LogTopic.ProducerRecord(Some("9"), wireJson("e", 9L, 5.0, "2024-01-01T10:20:00.000000"), 5L)))
+    val q2 = pipelineQuery(dir, ckpt, { (id, rows) =>
+      run2Batches.synchronized { run2Batches += id }
+      emitted.put(id, rows): Unit
+    })
+    q2.processAllAvailable(); q2.stop()
+
+    val rows = emitted.values.flatten.toSeq
+    assert(rows.map(_.txn_id).sorted == Seq("a", "b", "c", "d", "e"),
+      s"each event exactly once across the restart: ${rows.map(_.txn_id)}")
+    val run2 = run2Batches.toSeq.flatMap(emitted(_)).map(_.txn_id).sorted
+    assert(run2 == Seq("d", "e"), s"run 2 re-read offsets from run 1: $run2")
+    val byId = rows.map(r => r.txn_id -> r).toMap
+    // card 7's state came back from the checkpoint: d counts a and b
+    assert(byId("d").txn_count_last_10_min == 3L, byId("d").toString)
+    assert(math.abs(byId("d").avg_amt_last_1_hour - 30.0) < 1e-9, byId("d").toString)
+    // card 9: c is 18 min before e — outside 10 min, inside the hour
+    assert(byId("e").txn_count_last_10_min == 1L, byId("e").toString)
+    assert(math.abs(byId("e").avg_amt_last_1_hour - 17.5) < 1e-9, byId("e").toString)
+  }
+
   test("byte-accurate framing: records after a multi-byte foreign line read correctly; the foreign record fails LOUDLY with its location") {
     import java.nio.file.{Files, Paths, StandardOpenOption}
     import java.nio.charset.StandardCharsets.UTF_8

@@ -174,6 +174,154 @@ class StreamSpec extends AnyFunSuite with SparkSuite {
     assert(math.abs(c1.getAs[Double]("avg_amt_last_1_hour") - 60.0) < 1e-9)
   }
 
+  test("pipeline: one row per event, half-open trailing windows, equal to a plain-Scala recomputation") {
+    val mem = MemoryStream[StreamTxn](spark)
+    val stats = StreamPipeline.pipeline(mem.toDS(),
+      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
+    val q = stats.writeStream.format("memory").queryName("pipe_contract_t")
+      .outputMode("append").start()
+    // every event at its own coordinates, so the distances differ
+    def ev(id: String, cc: Long, amt: Double, at: Timestamp) = {
+      val k = math.abs(id.hashCode % 100) / 100.0
+      StreamTxn(id, cc, amt, 40.0 + k, -74.0 - k, 40.5 - k, -73.5 + k, at)
+    }
+    def at(s: String) = ts(s)
+    // hot card 1: an event every 90 s, spread over all three batches and
+    // listed newest first within each
+    def hot(is: Range) = is.reverse.map(i =>
+      ev(s"h$i", 1L, 10.0 + i, new Timestamp(at("2024-01-01 10:00:00").getTime + i * 90000L)))
+    val batches = Seq(
+      hot(0 until 8) ++ Seq(
+        // out of order within the batch (one with a sub-second part)
+        ev("o3", 2L, 30.0, at("2024-01-01 10:02:00")),
+        ev("o1", 2L, 10.0, at("2024-01-01 10:00:00.25")),
+        ev("o2", 2L, 20.0, at("2024-01-01 10:01:00")),
+        // an equal-ts pair
+        ev("e2", 3L, 5.0, at("2024-01-01 10:00:00")),
+        ev("e1", 3L, 7.0, at("2024-01-01 10:00:00")),
+        // exactly 600 s apart
+        ev("c1", 4L, 1.0, at("2024-01-01 10:00:00")),
+        ev("c2", 4L, 2.0, at("2024-01-01 10:10:00")),
+        ev("a1", 5L, 100.0, at("2024-01-01 10:00:00")),
+        ev("l1", 6L, 10.0, at("2024-01-01 10:00:00")),
+        ev("l2", 6L, 20.0, at("2024-01-01 10:08:00")),
+        ev("p1", 7L, 50.0, at("2024-01-01 10:00:00"))),
+      hot(8 until 14) ++ Seq(
+        ev("a2", 5L, 300.0, at("2024-01-01 11:00:00")),  // exactly 3600 s after a1
+        ev("l3", 6L, 40.0, at("2024-01-01 10:04:00")),   // late: behind l2
+        ev("p2", 7L, 70.0, at("2024-01-01 11:30:00"))),  // p1 leaves the horizon
+      hot(14 until 20) ++ Seq(
+        ev("e3", 3L, 9.0, at("2024-01-01 10:00:00")),    // equal ts, a later batch
+        ev("p3", 7L, 90.0, at("2024-01-01 10:05:00"))))  // late, p1 already pruned
+    batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    q.stop()
+
+    // the contract, recomputed batch by batch: an event's known events
+    // are the card's retained pairs plus its whole batch; retention keeps
+    // the pairs within 3600 s of the card's newest event
+    def miles(e: StreamTxn) = {
+      val (p1, p2) = (math.toRadians(e.lat), math.toRadians(e.merch_lat))
+      val a = math.pow(math.sin((p2 - p1) / 2), 2) + math.cos(p1) * math.cos(p2) *
+        math.pow(math.sin(math.toRadians(e.merch_long - e.lon) / 2), 2)
+      2 * 3963.0 * math.atan2(math.sqrt(a), math.sqrt(1 - a))
+    }
+    var retained = Map.empty[Long, Vector[(Long, Double)]]
+    val expected = batches.flatMap { b =>
+      b.groupBy(_.cc_num).toSeq.flatMap { case (cc, evs) =>
+        val known = retained.getOrElse(cc, Vector.empty) ++ evs.map(e => (e.ts.getTime, e.amount))
+        val rows = evs.map { e =>
+          val t = e.ts.getTime
+          val in10m = known.filter { case (k, _) => k > t - 600000L && k <= t }
+          val in1h = known.filter { case (k, _) => k > t - 3600000L && k <= t }
+          CardStats(cc, e.txn_id, e.amount, miles(e), in10m.size.toLong,
+            in1h.map(_._2).sum / in1h.size, e.ts)
+        }
+        val newest = known.map(_._1).max
+        retained += cc -> known.filter(_._1 > newest - 3600000L)
+        rows
+      }
+    }.map(r => r.txn_id -> r).toMap
+
+    val rows = spark.table("pipe_contract_t").as[CardStats].collect()
+    assert(rows.length == batches.map(_.length).sum, s"${rows.length} rows")
+    assert(rows.map(_.txn_id).distinct.length == rows.length, "a txn_id was emitted twice")
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    rows.foreach { r =>
+      val e = expected(r.txn_id)
+      assert(r.cc_num == e.cc_num && r.amount == e.amount && r.last_update == e.last_update &&
+        r.txn_count_last_10_min == e.txn_count_last_10_min &&
+        close(r.avg_amt_last_1_hour, e.avg_amt_last_1_hour) &&
+        close(r.distance_to_merchant, e.distance_to_merchant), s"got $r, expected $e")
+    }
+    // the cases, pinned by value as well
+    val got = rows.map(r => r.txn_id -> r).toMap
+    def n(id: String) = got(id).txn_count_last_10_min
+    def avg(id: String) = got(id).avg_amt_last_1_hour
+    assert(n("h19") == 7L, "hot card: 7 events in (t - 600 s, t] at 90 s spacing")
+    assert(Seq("o1", "o2", "o3").map(n) == Seq(1L, 2L, 3L))
+    assert(n("e1") == 2L && n("e2") == 2L && n("e3") == 3L)
+    assert(n("c2") == 1L && avg("c2") == 1.5, "600 s apart: not in each other's count")
+    assert(n("a2") == 1L && avg("a2") == 300.0, "3600 s apart must not average each other")
+    assert(n("l3") == 2L && avg("l3") == 25.0, "late event: l1 and itself, not the later l2")
+    assert(n("l2") == 2L, "the row emitted before the late event is not revised")
+    assert(n("p3") == 1L && avg("p3") == 90.0, "p1 was pruned past the 1-hour horizon")
+  }
+
+  test("pipeline plan: one source scan, one stateful operator, one micro-batch per trickle") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val mem = MemoryStream[String](spark)
+    val stats = StreamPipeline.pipeline(StreamPipeline.parse(mem.toDF()),
+      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
+    val q = stats.writeStream.format("memory").queryName("pipe_shape_t")
+      .outputMode("append").start()
+    def wire(i: Int) =
+      s"""{"txn_id":"s$i","cc_num":"${i % 3}","amount":"${i + 1}.0","lat":"40.0",""" +
+        s""""long":"-74.0","merch_lat":"40.1","merch_long":"-74.1",""" +
+        f""""timestamp":"2024-01-01T10:${i / 60}%02d:${i % 60}%02d"}"""
+    // a batch that ran (a no-data batch included) times its sink write;
+    // an idle trigger's progress has no addBatch
+    def batchesRun = q.recentProgress.count(_.durationMs.containsKey("addBatch"))
+    val trickles = Seq(0 until 20, 20 until 40, 40 until 60)
+    val perTrickle = trickles.map { r =>
+      val before = batchesRun
+      mem.addData(r.map(wire): _*)
+      q.processAllAvailable()
+      batchesRun - before
+    }
+    val progress = q.recentProgress.toSeq
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    q.stop()
+    assert(perTrickle == Seq(1, 1, 1), s"micro-batches per trickle: $perTrickle")
+    assert(progress.map(_.numInputRows).sum == 60L, "each event must be read once")
+    // (the operator's other leaf is its empty initial-state relation)
+    assert(plan.collect { case s: MicroBatchScanExec => s }.length == 1, plan.treeString)
+    assert(plan.collect { case s: StateStoreWriter => s }.length == 1, plan.treeString)
+    assert(progress.last.stateOperators.length == 1)
+    assert(spark.table("pipe_shape_t").count() == 60L, "one row per event")
+  }
+
+  test("pipeline under EventTimeTimeout: rows behind the 5 s watermark drop, idle cards evict") {
+    val mem = MemoryStream[StreamTxn](spark)
+    val stats = StreamPipeline.pipeline(mem.toDS(),
+      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)
+    val q = stats.writeStream.format("memory").queryName("pipe_ett_t")
+      .outputMode("append").start()
+    mem.addData(txn("a", 5L, 10.0, "2024-01-01 10:00:00"), txn("b", 5L, 30.0, "2024-01-01 10:00:30"))
+    q.processAllAvailable()
+    // watermark 10:00:25: the late row drops; card 9 moves event time a
+    // day on, past card 5's newest event + the 1-day TTL
+    mem.addData(txn("late", 5L, 1.0, "2024-01-01 10:00:10"), txn("c", 9L, 5.0, "2024-01-02 12:00:00"))
+    q.processAllAvailable()
+    val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    q.stop()
+    val rows = spark.table("pipe_ett_t").as[CardStats].collect().map(r => r.txn_id -> r).toMap
+    assert(rows.keySet == Set("a", "b", "c"), rows.keySet.toString)
+    assert(rows("b").txn_count_last_10_min == 2L && rows("b").avg_amt_last_1_hour == 20.0)
+    assert(stateRows == 1L, s"card 5 should have timed out, state rows $stateRows")
+  }
+
   test("json-lines file source drives the wire-format parse (S5 shape)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_src_").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "b.txt"),
