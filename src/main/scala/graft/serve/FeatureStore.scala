@@ -7,8 +7,10 @@ import graft.schema.FeatureRow
 
 /** Serving facade — one method per reference REST route
   * (`back_end/app/routes/feature.py`; README.md:104-115). The "API" of
-  * the engine is this Scala surface; each method is a plain DataFrame
-  * query so filters push down to the parquet scan.
+  * the engine is this Scala surface. Each method returns a DataFrame:
+  * the point lookups by card come from a parquet store's card index
+  * (see [[ParquetBackend]]), every other method is a plain query whose
+  * filters push down to the parquet scan or the JDBC WHERE clause.
   */
 class FeatureStore(spark: SparkSession, backend: OfflineBackend) {
 
@@ -20,9 +22,17 @@ class FeatureStore(spark: SparkSession, backend: OfflineBackend) {
   /** GET /features — bulk scan with cap (feature.py:56-67,111). */
   def bulk(limit: Int = 100000): DataFrame = offline.limit(limit)
 
-  /** GET /features/by-ccnum/{cc} — point lookup (feature.py:70-80);
-    * the equality predicate reaches the parquet row groups. */
-  def byCcNum(cc: Long): DataFrame = offline.filter(col("cc_num") === cc)
+  /** GET /features/by-ccnum/{cc} — point lookup (feature.py:70-80).
+    * On a parquet store the rows come from its card index, newest
+    * first, as a local relation: collecting it runs no Spark job. The
+    * lookup first syncs the index with one listing of the directory,
+    * so appends from any writer are served on the next request; it
+    * reads only files added since the last sync ([[ingest]] reads its
+    * own files into the index before it returns). A store over the
+    * index's budget (a quarter of the driver heap), and a JDBC store,
+    * answer with the equality filter pushed to the scan, in file order. */
+  def byCcNum(cc: Long): DataFrame =
+    indexed(cc, Int.MaxValue).getOrElse(scanCard(cc))
 
   /** GET /features/by-date — inclusive day range with the reference's
     * 00:00:00 / 23:59:59.999999 bounds (feature.py:83-103). */
@@ -31,9 +41,19 @@ class FeatureStore(spark: SparkSession, backend: OfflineBackend) {
       to_timestamp(lit(s"$startDay 00:00:00")),
       to_timestamp(lit(s"$endDay 23:59:59.999999"))))
 
-  /** GET /redis/transactions/{cc} top-k recent (feature.py:164). */
+  /** GET /redis/transactions/{cc} top-k recent (feature.py:164): the
+    * first `k` rows of [[byCcNum]]'s index answer, whose ties on
+    * `feature_timestamp` come in one fixed order. Where [[byCcNum]]
+    * scans, this sorts and limits the scan. */
   def topKRecent(cc: Long, k: Int = 5): DataFrame =
-    byCcNum(cc).orderBy(col("feature_timestamp").desc).limit(k)
+    indexed(cc, k).getOrElse(scanCard(cc).orderBy(col("feature_timestamp").desc).limit(k))
+
+  private def indexed(cc: Long, k: Int): Option[DataFrame] = backend match {
+    case p: ParquetBackend => p.newestFirst(spark, cc, k)
+    case _ => None
+  }
+
+  private def scanCard(cc: Long): DataFrame = offline.filter(col("cc_num") === cc)
 
   /** Latest row per card — the zrevrange(0,0) lookup generalized
     * (feature.py:126-128). */

@@ -22,14 +22,17 @@ import org.apache.spark.sql.functions.{col, count, lit, max, struct, to_json}
   *   - `POST /features`                      — batch ingest of JSON
   *     rows (JSON-lines or a JSON array body)
   *
-  * Responses are JSON arrays of row objects; serialization runs on
-  * executors and only the capped result collects — the server is the
-  * EDGE of the system, and the cap (`maxRows` rows per response, at
-  * most four responses in flight on the handler threads) keeps it
-  * driver-scale by contract while every filter still pushes down to
-  * the parquet scan underneath. Spark is the query engine;
-  * HTTP is a thin, stateless adapter — which is exactly the split the
-  * reference's FastAPI+Spark layout has.
+  * Responses are JSON arrays of row objects; only the capped result
+  * collects — the server is the EDGE of the system, and the cap
+  * (`maxRows` rows per response, at most four responses in flight on
+  * the handler threads) keeps it driver-scale by contract. By-card and
+  * recent-k answers come from the parquet store's driver-resident card
+  * index as local relations and serialize on the driver with no Spark
+  * job (an over-budget or JDBC store scans instead); bulk and by-date
+  * queries serialize on executors with their filters pushed down to
+  * the scan underneath. Spark is the query engine; HTTP is a thin,
+  * stateless adapter — which is exactly the split the reference's
+  * FastAPI+Spark layout has.
   */
 class HttpApi(spark: SparkSession, store: FeatureStore,
     host: String = "127.0.0.1", port: Int = 0, maxRows: Int = 100000,

@@ -420,21 +420,21 @@ class SnapshotScan(schema: StructType, desc: String,
   override def readSchema(): StructType = schema
   override def description(): String = desc
 
-  /** Manifest-derived size estimates for the planner ([[Snapshots]]
+  /** Manifest-derived estimates for the planner ([[Snapshots]]
     * records per-file row counts at commit): numRows from the cached
-    * log fold, sizeInBytes = rows x the negotiated schema's default
-    * row width — the same estimate a file source derives from bytes,
-    * without listing or opening any data file. Unknown (empty) rather
-    * than wrong when stats are unavailable. */
+    * log fold, without listing or opening any data file. sizeInBytes
+    * is unknown, so the planner prices the scan at
+    * `spark.sql.defaultSizeInBytes` and never broadcasts it on a
+    * guess: rows x the schema's default row width priced a string at
+    * 20 bytes and could broadcast a text-heavy table. The log records
+    * no file sizes to do better. numRows is unknown too when stats are
+    * unavailable. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
       private val rows = rowEstimate()
       override def numRows(): java.util.OptionalLong = rows
         .map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
-      override def sizeInBytes(): java.util.OptionalLong = rows
-        .map(n => java.util.OptionalLong.of(
-          math.max(1L, n * schema.defaultSize.toLong)))
-        .getOrElse(java.util.OptionalLong.empty())
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 
   override def toBatch: Batch = new Batch {

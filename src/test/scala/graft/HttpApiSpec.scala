@@ -5,12 +5,14 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.FeatureRow
-import graft.serve.{FeatureStore, HttpApi}
+import graft.serve.{FeatureStore, HttpApi, ParquetBackend}
 
 /** The HTTP serving layer end-to-end: real sockets, real requests —
   * the reference's FastAPI route surface (`back_end/app/main.py`,
@@ -74,14 +76,18 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
       s""""distance_to_merchant":3.2,"txn_count_last_10_min":1,"avg_amt_last_1_hour":$amt,""" +
       s""""category":"travel","gender":"M","city_pop":500,"feature_timestamp":"$at","is_fraud":0}"""
 
-  /** Jobs started, and stages that wrote shuffle output, while it is registered. */
+  /** Jobs started, stages that wrote shuffle output, and input records
+    * read, while it is registered. */
   private final class JobRecorder extends SparkListener {
     val jobs = new AtomicInteger
     val shuffleStages = new AtomicInteger
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
         shuffleStages.incrementAndGet()
+      recordsRead.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
   }
 
   private def recording(body: => Unit): JobRecorder = {
@@ -465,4 +471,228 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
       }
     } finally pool.shutdown()
   }
+
+  // --- the card index behind by-card and recent-k --------------------
+
+  /** `n` rows over `cards` cards, one minute apart: no card has two
+    * rows at one timestamp. */
+  private def cardRows(n: Int, cards: Int, amt: Double = 1.0, from: Int = 0): Seq[FeatureRow] =
+    (from until from + n).map(i => FeatureRow(100L + i % cards, amt, 10, 2, 33.5, 12.0, 1, amt,
+      if (i % 2 == 0) "grocery" else "travel", "F", 1000,
+      new Timestamp(1717200000000L + i * 60000L), 0))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq
+
+  /** By-card rows equal the scan's as a multiset and recent-k equals
+    * the scan's sort-and-limit, for every card of the store. */
+  private def assertMatchesScan(fs: FeatureStore, k: Int = 3): Unit = {
+    import org.apache.spark.sql.functions.col
+    val cards = fs.offline.select("cc_num").distinct().collect().map(_.getLong(0))
+    assert(cards.nonEmpty)
+    cards.foreach { cc =>
+      val scan = fs.offline.filter(col("cc_num") === cc)
+      assert(rowsOf(fs.byCcNum(cc)).sorted == rowsOf(scan).sorted, s"by-card $cc")
+      assert(rowsOf(fs.topKRecent(cc, k)) ==
+        rowsOf(scan.orderBy(col("feature_timestamp").desc).limit(k)), s"recent-$k $cc")
+    }
+  }
+
+  private def partFiles(p: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+    try s.iterator().asScala.filter(f => f.getFileName.toString.endsWith(".parquet")).toSeq
+    finally s.close()
+  }
+
+  test("card index: warm by-card and recent-k requests run no Spark job and equal the scan") {
+    val p = newStorePath("graft_index_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    assert(partFiles(p).size == 4)
+    val fs = new FeatureStore(spark, p)
+    withApi(fs) { b =>
+      assert(countRows(getAt(b, "/features/by-ccnum/100").body()) == 10) // the warm lookup
+      val warm = recording {
+        (100L until 140L).foreach { cc =>
+          val card = getAt(b, s"/features/by-ccnum/$cc")
+          assert(card.statusCode() == 200 && countRows(card.body()) == 10, card.body())
+          val recent = getAt(b, s"/transactions/$cc/recent?k=3")
+          assert(recent.statusCode() == 200 && countRows(recent.body()) == 3, recent.body())
+        }
+      }
+      assert(warm.jobs.get == 0, s"${warm.jobs.get} jobs served 80 warm lookups")
+    }
+    assertMatchesScan(fs)
+    // by-card rows come newest first
+    val ts = fs.byCcNum(100L).collect().map(_.getAs[Timestamp]("feature_timestamp").getTime)
+    assert(ts.toSeq == ts.sorted.reverse.toSeq)
+  }
+
+  test("card index: ties on feature_timestamp come in one order, whatever the file order") {
+    val tied = (1 to 6).map(i => row(5L, i.toDouble, "2024-07-01 10:00:00", 0))
+    def order(rows: Seq[FeatureRow]): Seq[Double] = {
+      val p = newStorePath("graft_index_ties_")
+      rows.foreach(r => Seq(r).toDS().toDF().write.mode("append").parquet(p))
+      new FeatureStore(spark, p).topKRecent(5L, 6).collect().map(_.getAs[Double]("amt")).toSeq
+    }
+    val first = order(tied)
+    assert(first.sorted == tied.map(_.amt))
+    assert(order(tied.reverse) == first)
+  }
+
+  test("card index: a file another writer appends is served next, and that sync reads only it") {
+    val p = newStorePath("graft_index_append_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    assert(fs.byCcNum(100L).count() == 10)
+    cardRows(3, 1, amt = 7.0, from = 1000).toDS().toDF().coalesce(1)
+      .write.mode("append").parquet(p)
+    val sync = recording { assert(fs.byCcNum(100L).count() == 13) }
+    assert(sync.recordsRead.get == 3, s"the sync read ${sync.recordsRead.get} rows, not the new file's 3")
+    val next = recording { assert(fs.topKRecent(100L, 3).collect().forall(_.getAs[Double]("amt") == 7.0)) }
+    assert(next.jobs.get == 0)
+    assertMatchesScan(fs)
+  }
+
+  test("card index: an ingest reads its own files in, and lookups during it serve the index as it was") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val p = newStorePath("graft_index_ingest_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    assert(fs.byCcNum(100L).count() == 10)
+    IngestGate.started = new java.util.concurrent.CountDownLatch(1)
+    IngestGate.release = new java.util.concurrent.CountDownLatch(1)
+    // the ingest's write job waits at the gate until the lookups ran
+    val gate = udf { (amt: Double) =>
+      IngestGate.started.countDown()
+      IngestGate.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      amt
+    }
+    val rows = cardRows(3, 1, amt = 7.0, from = 1000).toDS().toDF().coalesce(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try fs.ingest(rows.withColumn("amt", gate(col("amt"))))
+      catch { case e: Throwable => failure.set(e) })
+    writer.start()
+    try {
+      assert(IngestGate.started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val during = recording {
+        assert(fs.byCcNum(100L).collect().forall(_.getAs[Double]("amt") == 1.0))
+        assert(fs.topKRecent(100L, 3).collect().forall(_.getAs[Double]("amt") == 1.0))
+      }
+      assert(during.jobs.get == 0, s"${during.jobs.get} jobs served lookups during a write")
+    } finally { IngestGate.release.countDown(); writer.join() }
+    assert(failure.get == null, String.valueOf(failure.get))
+    val after = recording {
+      assert(fs.topKRecent(100L, 3).collect().map(_.getAs[Double]("amt")).toSeq == Seq(7.0, 7.0, 7.0))
+      assert(fs.byCcNum(100L).collect().length == 13)
+    }
+    assert(after.jobs.get == 0, s"${after.jobs.get} jobs served lookups after the ingest returned")
+    assertMatchesScan(fs)
+  }
+
+  test("card index: a deleted file, clear() and an overwrite each rebuild it") {
+    val p = newStorePath("graft_index_rebuild_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    assert(fs.byCcNum(100L).count() == 10)
+    // a file deleted by another process: the next sync reads the three left
+    java.nio.file.Files.delete(partFiles(p).head)
+    val rebuilt = recording(fs.byCcNum(100L).collect())
+    assert(rebuilt.recordsRead.get == 300, s"the rebuild read ${rebuilt.recordsRead.get} rows")
+    val reread = recording(fs.byCcNum(100L).collect())
+    assert(reread.jobs.get == 0, "a rebuilt index was not kept")
+    assertMatchesScan(fs)
+    // clear() through the engine
+    fs.clear()
+    assert(fs.byCcNum(100L).count() == 0 && fs.topKRecent(100L, 3).count() == 0)
+    fs.ingest(cardRows(20, 2, amt = 3.0).toDS().toDF())
+    assert(fs.byCcNum(100L).collect().map(_.getAs[Double]("amt")).toSeq == Seq.fill(10)(3.0))
+    // an overwrite through the backend, and one by another writer
+    ParquetBackend(p).overwrite(cardRows(20, 2, amt = 4.0).toDS().toDF())
+    assert(fs.byCcNum(101L).collect().map(_.getAs[Double]("amt")).toSeq == Seq.fill(10)(4.0))
+    cardRows(20, 2, amt = 5.0).toDS().toDF().write.mode("overwrite").parquet(p)
+    assert(fs.byCcNum(101L).collect().map(_.getAs[Double]("amt")).toSeq == Seq.fill(10)(5.0))
+    assertMatchesScan(fs)
+  }
+
+  test("card index: lookups looping beside overwrites never return rows of an older generation") {
+    val p = newStorePath("graft_index_race_")
+    cardRows(200, 10, amt = 0.0).toDS().toDF().repartition(3).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    fs.byCcNum(100L).collect()
+    // generation g's rows all carry amt = g
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Seq[Double])]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Throwable)]()
+    val loops = (0 until 2).map { t =>
+      val th = new Thread(() => {
+        var i = 0
+        while (!stop.get) {
+          val lo = done.get
+          val cc = 100L + (i + t) % 10
+          try {
+            val amts = (if (i % 2 == 0) fs.byCcNum(cc) else fs.topKRecent(cc, 5))
+              .collect().map(_.getAs[Double]("amt")).toSeq
+            seen.add((lo, started.get, amts))
+          } catch { case e: Exception => failures.add((lo, started.get, e)) }
+          i += 1
+        }
+      })
+      th.start()
+      th
+    }
+    try (1 to 4).foreach { g =>
+      Thread.sleep(300)
+      started.set(g)
+      ParquetBackend(p).overwrite(cardRows(200, 10, amt = g.toDouble).toDS().toDF().repartition(3))
+      done.set(g)
+    } finally { Thread.sleep(300); stop.set(true); loops.foreach(_.join()) }
+    assert(seen.size > 20, s"only ${seen.size} lookups ran")
+    seen.asScala.foreach { case (lo, hi, amts) =>
+      assert(amts.distinct.size <= 1, s"one lookup mixed generations: $amts")
+      // an empty answer comes only from a directory an overwrite emptied
+      assert(amts.nonEmpty || hi > lo, s"a lookup between overwrites found no rows")
+      amts.headOption.foreach(g => assert(g >= lo && g <= hi,
+        s"a lookup started after generation $lo saw generation $g"))
+    }
+    // a lookup may fail only while an overwrite deletes its files
+    failures.asScala.foreach { case (lo, hi, e) => assert(hi > lo, s"a lookup failed between overwrites: $e") }
+    assert(fs.byCcNum(100L).collect().map(_.getAs[Double]("amt")).toSet == Set(4.0))
+  }
+
+  test("card index: a store over its budget answers the same rows through the scan path") {
+    val p = newStorePath("graft_index_budget_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    ParquetBackend.setIndexBudget(spark, p, 4096L)
+    val fs = new FeatureStore(spark, p)
+    assertMatchesScan(fs)
+    val scans = recording(fs.byCcNum(100L).collect())
+    assert(scans.jobs.get > 0 && scans.recordsRead.get > 0, "an over-budget store served from an index")
+    withApi(fs) { b =>
+      val r = getAt(b, "/transactions/100/recent?k=2")
+      assert(r.statusCode() == 200 && countRows(r.body()) == 2, r.body())
+    }
+  }
+
+  test("card index: a partitioned directory written by another writer serves its partition column") {
+    val p = newStorePath("graft_index_partitioned_")
+    cardRows(100, 10).toDS().toDF().write.partitionBy("category").parquet(p)
+    val fs = new FeatureStore(spark, p)
+    assert(fs.byCcNum(100L).collect().map(_.getAs[String]("category")).toSet == Set("grocery"))
+    assert(fs.byCcNum(101L).collect().map(_.getAs[String]("category")).toSet == Set("travel"))
+    cardRows(2, 1, from = 500).map(_.copy(category = "health")).toDS().toDF()
+      .write.mode("append").partitionBy("category").parquet(p)
+    val top = fs.topKRecent(100L, 2).collect()
+    assert(top.map(_.getAs[String]("category")).toSeq == Seq("health", "health"))
+    assertMatchesScan(fs)
+  }
+}
+
+/** Holds an ingest's write job open while a test looks cards up; the
+  * job's tasks run in this JVM, so they see the test's latches. */
+object IngestGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(0)
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
 }

@@ -482,4 +482,20 @@ class SnapshotSqlSpec extends AnyFunSuite with SparkSuite {
     assert(stats.rowCount.contains(BigInt(orders.count())),
       s"expected manifest row count in planner stats, got $stats")
   }
+
+  test("provider scan reports the manifest row count and leaves its byte size unknown") {
+    // long strings: rows x the schema's default width (20 bytes a
+    // string) would price this table far below its real size
+    val t = freshTable()
+    Snapshots.commit(spark, t, spark.range(50).select($"id", repeat(lit("x"), 10000).as("text")))
+    val scan = spark.read.format("graft-snapshot").load(t).queryExecution.optimizedPlan
+      .collectFirst { case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r }
+      .getOrElse(fail("no DSv2 scan in the plan"))
+    val stats = scan.scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics()
+    assert(stats.numRows().getAsLong == 50L)
+    assert(!stats.sizeInBytes().isPresent, s"sizeInBytes ${stats.sizeInBytes()}")
+    assert(scan.stats.sizeInBytes == BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    assert(scan.stats.rowCount.contains(BigInt(50)))
+  }
 }
