@@ -24,7 +24,10 @@ class FeatureStore(spark: SparkSession, backend: OfflineBackend) {
 
   /** GET /features/by-ccnum/{cc} — point lookup (feature.py:70-80).
     * On a parquet store the rows come from its card index, newest
-    * first, as a local relation: collecting it runs no Spark job. The
+    * first, as a local relation over the rows the index holds: building
+    * it converts or copies no row, collecting it runs no Spark job, and
+    * [[HttpApi]] writes its first `maxRows` rows as JSON with no query
+    * planned, so a hot card costs a request its cap, not its size. The
     * lookup first syncs the index with one listing of the directory,
     * so appends from any writer are served on the next request; it
     * reads only files added since the last sync ([[ingest]] reads its

@@ -5,8 +5,10 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftLocalBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, count, lit, max, struct, to_json}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** HTTP serving layer over [[FeatureStore]] — the reference's FastAPI
   * app (`back_end/app/main.py`, `app/routes/feature.py`) re-expressed
@@ -27,10 +29,13 @@ import org.apache.spark.sql.functions.{col, count, lit, max, struct, to_json}
   * (`maxRows` rows per response, at most four responses in flight on
   * the handler threads) keeps it driver-scale by contract. By-card and
   * recent-k answers come from the parquet store's driver-resident card
-  * index as local relations and serialize on the driver with no Spark
-  * job (an over-budget or JDBC store scans instead); bulk and by-date
-  * queries serialize on executors with their filters pushed down to
-  * the scan underneath. Spark is the query engine; HTTP is a thin,
+  * index as local relations, and their rows are written by Spark's own
+  * JSON writer on the handler thread: no query is planned, and no SQL
+  * execution or Spark job starts (an over-budget or JDBC store scans
+  * instead). Bulk and by-date queries serialize on executors with
+  * their filters pushed down to the scan underneath; local `/similar`
+  * answers go through the same JSON writer as the index's rows. Spark
+  * is the query engine; HTTP is a thin,
   * stateless adapter — which is exactly the split the reference's
   * FastAPI+Spark layout has.
   */
@@ -63,33 +68,46 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
 
   // --- plumbing ---------------------------------------------------
 
-  /** Send a DataFrame as a JSON array of row objects. Each row is
-    * serialized on the executors by a `to_json(struct(*))` projection
-    * under the caller's limit: the optimizer pushes the projection below
-    * the limit, so `collect` runs a limit-rooted plan (`CollectLimit`,
-    * or `TakeOrderedAndProject` for a sorted top-k) with no exchange.
-    * `Dataset.toJSON` would sit above the limit as an opaque map and
-    * force a single-partition shuffle under it. Every route caps its
-    * query at `maxRows`, so the driver holds at most `maxRows`
-    * serialized rows per response, and at most four responses at once
-    * (one per handler thread). */
-  private def respondJson(ex: HttpExchange, status: Int, df: DataFrame): Unit = {
-    // collect BEFORE the headers, so a failing query still maps to a
-    // clean 400/500 instead of a truncated body
-    val rows = df.select(to_json(struct(col("*")))).collect()
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, 0L)
-    val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
-    try {
-      os.write('[')
-      var i = 0
-      while (i < rows.length) {
-        if (i > 0) os.write(',')
-        os.write(rows(i).getString(0).getBytes(StandardCharsets.UTF_8))
-        i += 1
-      }
-      os.write(']')
-    } finally os.close()
+  /** Send the first `limit` rows of a DataFrame as a JSON array of row
+    * objects, each as `Dataset.toJSON` writes it.
+    *
+    * A DataFrame whose analyzed plan is a local relation (the card
+    * index's by-card and recent-k answers) is already on the driver:
+    * its first `limit` rows are written straight through Spark's JSON
+    * writer ([[GraftLocalBridge.jsonArray]]), so no projection is
+    * analyzed or planned and no SQL execution starts.
+    *
+    * Any other DataFrame is serialized on the executors by a
+    * `to_json(struct(*))` projection under the limit: the optimizer
+    * pushes the projection below the limit, so `collect` runs a
+    * limit-rooted plan (`CollectLimit`, or `TakeOrderedAndProject` for
+    * a sorted top-k) with no exchange. `Dataset.toJSON` would sit above
+    * the limit as an opaque map and force a single-partition shuffle
+    * under it. Every route caps its answer at `maxRows`, so the driver
+    * holds at most `maxRows` serialized rows per response, and at most
+    * four responses at once (one per handler thread). */
+  private def respondJson(ex: HttpExchange, status: Int, df: DataFrame,
+      limit: Int = Int.MaxValue): Unit = GraftLocalBridge.localRows(df) match {
+    case Some((schema, local)) =>
+      respond(ex, status, GraftLocalBridge.jsonArray(spark, schema, local.iterator.take(limit)))
+    case None =>
+      val capped = if (limit < Int.MaxValue) df.limit(limit) else df
+      // collect BEFORE the headers, so a failing query still maps to a
+      // clean 400/500 instead of a truncated body
+      val rows = capped.select(to_json(struct(col("*")))).collect()
+      ex.getResponseHeaders.set("Content-Type", "application/json")
+      ex.sendResponseHeaders(status, 0L)
+      val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
+      try {
+        os.write('[')
+        var i = 0
+        while (i < rows.length) {
+          if (i > 0) os.write(',')
+          os.write(rows(i).getString(0).getBytes(StandardCharsets.UTF_8))
+          i += 1
+        }
+        os.write(']')
+      } finally os.close()
   }
 
   private def respond(ex: HttpExchange, status: Int, body: String,
@@ -164,7 +182,7 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
       case ("GET", p) if p.startsWith("/features/by-ccnum/")
           && !p.stripPrefix("/features/by-ccnum/").contains('/') =>
         val cc = parseLong("cc_num")(p.stripPrefix("/features/by-ccnum/"))
-        respondJson(ex, 200, store.byCcNum(cc).limit(maxRows))
+        respondJson(ex, 200, store.byCcNum(cc), maxRows)
       case ("GET", "/features/by-date") =>
         val ps = queryParams(ex)
         val start = ps.getOrElse("start",
@@ -200,7 +218,7 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
         backend match {
           // driver-local rows: straight to JSON, no Spark in the path
           case l: HttpApi.LocalAnnBackend =>
-            respond(ex, 200, HttpApi.rowsJson(l.similarRows(id, cap(k))))
+            respond(ex, 200, HttpApi.similarJson(spark, l.similarRows(id, cap(k))))
           case _ => respondJson(ex, 200, backend.similar(id, cap(k)))
         }
       case (Some(backend), "POST", "/similar") =>
@@ -208,7 +226,7 @@ class HttpApi(spark: SparkSession, store: FeatureStore,
         val (vec, kOpt) = parseVectorBody(body)
         backend match {
           case l: HttpApi.LocalAnnBackend =>
-            respond(ex, 200, HttpApi.rowsJson(l.similarToRows(vec, cap(kOpt.getOrElse(5)))))
+            respond(ex, 200, HttpApi.similarJson(spark, l.similarToRows(vec, cap(kOpt.getOrElse(5)))))
           case _ => respondJson(ex, 200, backend.similarTo(vec, cap(kOpt.getOrElse(5))))
         }
       case _ =>
@@ -327,30 +345,27 @@ object HttpApi {
   }
 
   /** A backend whose results are DRIVER-LOCAL rows: the HTTP handler
-    * serializes them straight to JSON — no DataFrame, no Spark job, no
-    * analysis pass in the request path (~70 ms of per-request overhead
-    * measured on a 5-row local relation). Row JSON matches
-    * `df.toJSON` of the DataFrame form exactly (null `cos` omitted),
-    * so the two paths are wire-compatible. */
+    * serializes them straight to JSON with Spark's JSON writer — no
+    * DataFrame, no Spark job, no analysis pass in the request path
+    * (~70 ms of per-request overhead measured on a 5-row local
+    * relation). Row JSON matches `df.toJSON` of the DataFrame form
+    * exactly (null `cos` omitted under the default
+    * `spark.sql.jsonGenerator.ignoreNullFields`), so the two paths are
+    * wire-compatible. */
   trait LocalAnnBackend extends AnnBackend {
     def similarRows(vecId: Long, k: Int): Array[(Long, Int, java.lang.Double)]
     def similarToRows(vector: Array[Double], k: Int): Array[(Long, Int, java.lang.Double)]
   }
 
-  private[serve] def rowsJson(rows: Array[(Long, Int, java.lang.Double)]): String = {
-    val sb = new java.lang.StringBuilder(rows.length * 48 + 2)
-    sb.append('[')
-    var i = 0
-    while (i < rows.length) {
-      if (i > 0) sb.append(',')
-      val (id, rank, cos) = rows(i)
-      sb.append("{\"neighbor_id\":").append(id).append(",\"rank\":").append(rank)
-      if (cos != null) sb.append(",\"cos\":").append(cos.doubleValue())
-      sb.append('}')
-      i += 1
-    }
-    sb.append(']').toString
-  }
+  /** The schema of a `/similar` answer's rows. */
+  private val similarSchema = StructType(Seq(
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("cos", DoubleType, nullable = true)))
+
+  private def similarJson(spark: SparkSession, rows: Array[(Long, Int, java.lang.Double)]): String =
+    GraftLocalBridge.jsonArray(spark, similarSchema,
+      rows.iterator.map { case (id, rank, cos) => InternalRow(id, rank, cos) })
 
   /** Serve `/similar` from a (possibly reloaded) IVF-PQ index THROUGH
     * the exact re-rank stage ([[graft.llm.Similarity.ivfPqTopKReranked]]):
@@ -385,17 +400,10 @@ object HttpApi {
         s"corpus contains id ${Long.MinValue} — no sentinel id available for raw-vector serving")
       Long.MinValue
     }
-    private val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("neighbor_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cos",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
     private def toDf(rows: Array[(Long, Int, java.lang.Double)]) =
       spark.createDataFrame(
         java.util.Arrays.asList(rows.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2, r._3)): _*), schema)
+          org.apache.spark.sql.Row(r._1, r._2, r._3)): _*), similarSchema)
     override def similarRows(vecId: Long, k: Int): Array[(Long, Int, java.lang.Double)] = {
       val qv = engine.vectorOf(vecId).getOrElse(
         throw new IllegalArgumentException(s"unknown $idCol: $vecId"))

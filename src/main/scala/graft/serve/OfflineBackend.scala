@@ -1,10 +1,10 @@
 package graft.serve
 
-import scala.collection.immutable.LongMap
+import scala.collection.immutable.{ArraySeq, LongMap}
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, GraftLocalBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
@@ -81,11 +81,12 @@ final case class ParquetBackend(path: String) extends OfflineBackend {
     }
 
   /** Card `cc`'s first `k` rows, newest first, from the synced card
-    * index as a local relation (collecting it runs no Spark job); None
+    * index as a local relation over the rows the index holds (no row is
+    * converted or copied, and collecting it runs no Spark job); None
     * when the store is served by the scan path. */
   private[serve] def newestFirst(spark: SparkSession, cc: Long, k: Int): Option[DataFrame] =
     ParquetBackend.store(spark, path).synced(spark)
-      .map(index => spark.createDataFrame(index.rows(cc, k), index.schema))
+      .map(index => GraftLocalBridge.localFrame(spark, index.schema, index.rows(cc, k)))
 }
 
 object ParquetBackend {
@@ -102,7 +103,6 @@ object ParquetBackend {
       cards: LongMap[Array[UnsafeRow]], val bytes: Long) {
     private val ccAt = schema.fieldIndex("cc_num")
     private val tsAt = schema.fieldIndex("feature_timestamp")
-    private val toRow = CatalystTypeConverters.createToScalaConverter(schema)
 
     /** Newest first, null timestamps last; ties go by the rows' bytes,
       * so one set of rows always comes in one order. */
@@ -114,9 +114,11 @@ object ParquetBackend {
         case _ => java.util.Arrays.compare(a.getBytes, b.getBytes)
       }
 
-    def rows(cc: Long, k: Int): java.util.List[Row] =
-      java.util.Arrays.asList(cards.getOrElse(cc, Array.empty[UnsafeRow]).iterator.take(k)
-        .map(r => toRow(r).asInstanceOf[Row]).toSeq: _*)
+    /** The first `k` of the card's rows, as held. */
+    def rows(cc: Long, k: Int): Seq[InternalRow] = {
+      val all = cards.getOrElse(cc, Array.empty[UnsafeRow])
+      ArraySeq.unsafeWrapArray(if (k < all.length) all.take(k) else all)
+    }
 
     def plus(listing: Map[String, (Long, Long)], added: Seq[UnsafeRow], addedBytes: Long): CardIndex =
       new CardIndex(listing, schema,

@@ -8,7 +8,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.FeatureRow
@@ -76,13 +78,18 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
       s""""distance_to_merchant":3.2,"txn_count_last_10_min":1,"avg_amt_last_1_hour":$amt,""" +
       s""""category":"travel","gender":"M","city_pop":500,"feature_timestamp":"$at","is_fraud":0}"""
 
-  /** Jobs started, stages that wrote shuffle output, and input records
-    * read, while it is registered. */
+  /** Jobs started, stages that wrote shuffle output, input records
+    * read, and SQL executions started, while it is registered. */
   private final class JobRecorder extends SparkListener {
     val jobs = new AtomicInteger
     val shuffleStages = new AtomicInteger
     val recordsRead = new java.util.concurrent.atomic.AtomicLong
+    val executions = new AtomicInteger
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+      case _ =>
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
         shuffleStages.incrementAndGet()
@@ -525,6 +532,81 @@ class HttpApiSpec extends AnyFunSuite with SparkSuite {
     // by-card rows come newest first
     val ts = fs.byCcNum(100L).collect().map(_.getAs[Timestamp]("feature_timestamp").getTime)
     assert(ts.toSeq == ts.sorted.reverse.toSeq)
+  }
+
+  test("card index: warm by-card and recent-k requests start no SQL execution; by-date still does") {
+    val p = newStorePath("graft_index_noexec_")
+    cardRows(400, 40).toDS().toDF().repartition(4).write.parquet(p)
+    withApi(new FeatureStore(spark, p)) { b =>
+      assert(countRows(getAt(b, "/features/by-ccnum/100").body()) == 10) // the warm lookup
+      val warm = recording {
+        (100L until 140L).foreach { cc =>
+          assert(countRows(getAt(b, s"/features/by-ccnum/$cc").body()) == 10)
+          assert(countRows(getAt(b, s"/transactions/$cc/recent?k=3").body()) == 3)
+        }
+      }
+      assert(warm.executions.get == 0 && warm.jobs.get == 0,
+        s"80 warm lookups started ${warm.executions.get} SQL executions and ${warm.jobs.get} jobs")
+      val byDate = recording {
+        val r = getAt(b, "/features/by-date?start=2024-06-01&end=2024-06-01")
+        assert(r.statusCode() == 200 && countRows(r.body()) > 0, r.body())
+      }
+      assert(byDate.executions.get >= 1 && byDate.jobs.get >= 1,
+        "a by-date request started no SQL execution")
+    }
+  }
+
+  test("card index: a hot card's by-card answer is its maxRows newest rows, as toJSON writes them") {
+    val p = newStorePath("graft_index_hot_")
+    cardRows(40, 4).toDS().toDF().repartition(2).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    val a = new HttpApi(spark, fs, maxRows = 4)
+    a.start()
+    try {
+      val b = s"http://127.0.0.1:${a.boundPort}"
+      (100L until 104L).foreach { cc =>
+        val r = getAt(b, s"/features/by-ccnum/$cc")
+        assert(r.statusCode() == 200 && countRows(r.body()) == 4, r.body())
+        assert(r.body() == "[" + fs.byCcNum(cc).limit(4).toJSON.collect().mkString(",") + "]")
+        val newest = fs.offline.filter($"cc_num" === cc).orderBy($"feature_timestamp".desc).limit(4)
+        assert(rowsOf(fs.byCcNum(cc).limit(4)) == rowsOf(newest), s"card $cc")
+        assert(getAt(b, s"/transactions/$cc/recent?k=10").body() == r.body())
+      }
+    } finally a.stop()
+  }
+
+  test("card index: quotes, control characters, non-ASCII, nulls, NaN, infinities and microseconds " +
+    "are written as toJSON writes them") {
+    val p = newStorePath("graft_index_awkward_")
+    val categories = Seq("say \"hi\"", "back\\slash", "bell\u0007tab\t", "naïve 東京 \ud83d\ude00", null)
+    val amts = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 1e-7)
+    val rows = categories.zip(amts).zipWithIndex.map { case ((c, amt), i) =>
+      val at = new Timestamp(1717200000000L + i * 60000L)
+      at.setNanos(123456000 + i * 1000)
+      FeatureRow(7L, amt, 10, 2, 33.5, 12.0, 1, amt, c, if (i == 1) null else "F", 1000, at, 0)
+    }
+    rows.toDS().toDF().coalesce(1).write.parquet(p)
+    val fs = new FeatureStore(spark, p)
+    def wire(df: org.apache.spark.sql.DataFrame) = "[" + df.toJSON.collect().mkString(",") + "]"
+    withApi(fs) { b =>
+      def check(): Unit = {
+        val card = getAt(b, "/features/by-ccnum/7").body()
+        assert(card == wire(fs.byCcNum(7L)), card)
+        assert(countRows(card) == 5)
+        val recent = getAt(b, "/transactions/7/recent?k=3").body()
+        assert(recent == wire(fs.topKRecent(7L, 3)), recent)
+      }
+      check()
+      // the index keeps microseconds; the JSON timestamp format, on both paths, writes milliseconds
+      assert(fs.byCcNum(7L).collect().map(_.getAs[Timestamp]("feature_timestamp").getNanos).toSet ==
+        rows.map(_.feature_timestamp.getNanos).toSet)
+      // the writer takes its settings from the session, not the handler thread
+      withSQLConf("spark.sql.jsonGenerator.ignoreNullFields" -> "false",
+          "spark.sql.session.timeZone" -> "America/Los_Angeles") {
+        check()
+        assert(getAt(b, "/features/by-ccnum/7").body().contains("\"category\":null"))
+      }
+    }
   }
 
   test("card index: ties on feature_timestamp come in one order, whatever the file order") {
